@@ -343,8 +343,10 @@ object Bench {
     // per-query line above outgrew that window (the parsed totals were
     // lost two rounds running). The full map still prints above and
     // persists to bench_full.json + bench_history.jsonl; this line is
-    // small enough to land whole in any tail capture.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","total_med":$totalMed,"n_queries":${all.size},"errors":$errs,"sf":${jstr(sfDir)},"calib_first_s":$calibFirst,"calib_last_s":$calibLast,"full_map":"previous stdout line; also bench_full.json"}""")
+    // small enough to land whole in any tail capture. Its metric name
+    // differs from the full line's so a parser scanning for
+    // "metric":"total" finds exactly one line (the full map).
+    println(s"""{"metric":"total_tail","value":$total,"unit":"sec","total_med":$totalMed,"n_queries":${all.size},"errors":$errs,"sf":${jstr(sfDir)},"calib_first_s":$calibFirst,"calib_last_s":$calibLast,"full_map":"previous stdout line; also bench_full.json"}""")
     spark.stop()
   }
 }

@@ -586,156 +586,6 @@ object ScaleProbe {
         val tHadoop = loop(s"file:$root/hadoop-postings")
         println(f"[probe] ${"fsappend_hadoop_file"}%-24s ${tHadoop}%6.2f s")
       }
-      // --fssnap — the Snapshots store seam's price (r17, --fsappend's
-      // lakehouse twin): one full lifecycle per store — commit the base
-      // corpus (docs with doc_id%10 ∉ {7,8,9}), then three commitAppend
-      // batches — on a scheme-less LOCAL table and on the IDENTICAL
-      // directory via file:. The commit legs must match (same parquet
-      // job); the APPEND legs price the one documented store difference:
-      // carry-forward is hard-link O(files) locally but byte-copy
-      // O(table bytes) on Hadoop stores — this probe puts the real
-      // number on that note instead of leaving it a scaladoc claim.
-      if (args.contains("--fssnap")) {
-        import graft.sources.Snapshots
-        val docs = Tables.load(spark, sfDir, "documents")
-          .select(col("doc_id"), col("lang"), col("text"))
-        val base = docs.filter(col("doc_id") % 10 =!= 7 &&
-          col("doc_id") % 10 =!= 8 && col("doc_id") % 10 =!= 9)
-        def once(table: String): (Double, Double) = {
-          graft.sources.ArtifactIo.forPath(table).deleteTree(table)
-          val t0 = System.nanoTime()
-          Snapshots.commit(base, table): Unit
-          val tCommit = (System.nanoTime() - t0) / 1e9
-          val t1 = System.nanoTime()
-          Seq(7, 8, 9).foreach { m =>
-            Snapshots.commitAppend(docs.filter(col("doc_id") % 10 === m), table): Unit
-          }
-          ((tCommit, (System.nanoTime() - t1) / 1e9))
-        }
-        val root = graft.queries.QueryTmp.dir("probe-fssnap")
-        val (cL, aL) = once(s"$root/local-table")
-        println(f"[probe] ${"fssnap_local_commit"}%-24s ${cL}%6.2f s")
-        println(f"[probe] ${"fssnap_local_appends3"}%-24s ${aL}%6.2f s")
-        val (cH, aH) = once(s"file:$root/hadoop-table")
-        println(f"[probe] ${"fssnap_hadoop_commit"}%-24s ${cH}%6.2f s")
-        println(f"[probe] ${"fssnap_hadoop_appends3"}%-24s ${aH}%6.2f s")
-        // manifest legs (the r17 tier): same lifecycle with
-        // CarryManifest appends — each append writes ONLY its batch +
-        // a manifest, so the append legs must be at-or-below the
-        // carry-by-copy legs and the gap widens with table bytes
-        def onceManifest(table: String): Double = {
-          graft.sources.ArtifactIo.forPath(table).deleteTree(table)
-          Snapshots.commit(base, table): Unit
-          val t1 = System.nanoTime()
-          Seq(7, 8, 9).foreach { m =>
-            Snapshots.commitAppend(docs.filter(col("doc_id") % 10 === m), table,
-              carry = Snapshots.CarryManifest): Unit
-          }
-          (System.nanoTime() - t1) / 1e9
-        }
-        val aLM = onceManifest(s"$root/local-man")
-        println(f"[probe] ${"fssnap_local_man_app3"}%-24s ${aLM}%6.2f s")
-        val aHM = onceManifest(s"file:$root/hadoop-man")
-        println(f"[probe] ${"fssnap_hadoop_man_app3"}%-24s ${aHM}%6.2f s")
-      }
-      // --fssnapchain — the manifest-chain compaction cadence (r18, the
-      // r17 verdict's item 6): TEN CarryManifest appends on one table,
-      // per-append wall time + the carry manifest's inherited-file-name
-      // count (the O(resolved file count) term each manifest write
-      // re-lists), then a compactVersion RE-BASE, then three more
-      // appends — the post-compaction carry counts and append times must
-      // fall back to the start-of-chain envelope, which is the measured
-      // case for SCALING.md's compact-every-K-appends guidance.
-      if (args.contains("--fssnapchain")) {
-        import graft.sources.{Compact, Snapshots}
-        val docs = Tables.load(spark, sfDir, "documents")
-          .select(col("doc_id"), col("lang"), col("text"))
-        val base = docs.filter(col("doc_id") % 20 < 10)
-        val table = graft.queries.QueryTmp.dir("probe-fssnapchain") + "/t"
-        Snapshots.commit(base, table): Unit
-        def appendOnce(i: Int): (Double, Int) = {
-          val t0 = System.nanoTime()
-          val v = Snapshots.commitAppend(docs.filter(col("doc_id") % 20 === 10 + (i % 10)),
-            table, carry = Snapshots.CarryManifest)
-          (((System.nanoTime() - t0) / 1e9), Snapshots.carriedFileCount(table, v))
-        }
-        val chain = (0 until 10).map(appendOnce)
-        chain.zipWithIndex.foreach { case ((t, carried), i) =>
-          println(f"[probe] ${s"fssnapchain_app${i + 1}"}%-24s ${t}%6.2f s (carries $carried file names)")
-        }
-        val tc0 = System.nanoTime()
-        // compactVersion returns (newVersion, dataFileCount) — label
-        // accordingly (the pre-r19 print swapped them)
-        val (vComp, nFiles) = Compact.compactVersion(spark, table, 512L * 1024 * 1024)
-        println(f"[probe] ${"fssnapchain_compact"}%-24s ${(System.nanoTime() - tc0) / 1e9}%6.2f s " +
-          s"(re-based at v=$vComp -> $nFiles files)")
-        val post = (10 until 13).map(appendOnce)
-        post.zipWithIndex.foreach { case ((t, carried), i) =>
-          println(f"[probe] ${s"fssnapchain_post${i + 1}"}%-24s ${t}%6.2f s (carries $carried file names)")
-        }
-      }
-      // --cassnap — the CAS snapshot protocol priced against the
-      // rename-store protocol (r19; the --pccache parity-probe pattern
-      // applied to tv6's family): the SAME ten-append + compact + three
-      // post-append chain run twice — `file:` Snapshots/CarryManifest
-      // (one claim rename + locked pointer publish per append) vs
-      // `mock3c:` CasSnapshots (ONE conditional PUT per append through
-      // copy-rename staging committers). Per-append wall + the record's
-      // carried-name count (the O(resolved files) term both protocols
-      // pay); compaction re-bases both. The CAS protocol's extra work is
-      // zero — it REMOVES the lock acquisition and two renames — so it
-      // must price at parity or better per commit, modulo the mock's
-      // copy-committer staging.
-      if (args.contains("--cassnap")) {
-        import graft.sources.{ArtifactIo, CasSnapshots, Compact, ConditionalPutMockFs, Snapshots}
-        val hc = spark.sparkContext.hadoopConfiguration
-        hc.set("fs.mock3c.impl", classOf[ConditionalPutMockFs].getName)
-        ArtifactIo.addExtraScheme(hc, ArtifactIo.RenameByCopyExtraSchemesKey, "mock3c")
-        ArtifactIo.addExtraScheme(hc, ArtifactIo.ConditionalPutExtraSchemesKey, "mock3c")
-        val docs = Tables.load(spark, sfDir, "documents")
-          .select(col("doc_id"), col("lang"), col("text"))
-        val base = docs.filter(col("doc_id") % 20 < 10)
-        def batch(i: Int) = docs.filter(col("doc_id") % 20 === 10 + (i % 10))
-        def chainOf(label: String, commitBase: () => Unit, appendOnce: Int => (Double, Int),
-            compactNow: () => (Double, String)): Unit = {
-          commitBase()
-          (0 until 10).map(appendOnce).zipWithIndex.foreach { case ((t, carried), i) =>
-            println(f"[probe] ${s"cassnap_${label}_app${i + 1}"}%-24s ${t}%6.2f s (carries $carried file names)")
-          }
-          val (tc, what) = compactNow()
-          println(f"[probe] ${s"cassnap_${label}_compact"}%-24s $tc%6.2f s ($what)")
-          (10 until 13).map(appendOnce).zipWithIndex.foreach { case ((t, carried), i) =>
-            println(f"[probe] ${s"cassnap_${label}_post${i + 1}"}%-24s ${t}%6.2f s (carries $carried file names)")
-          }
-        }
-        val root = graft.queries.QueryTmp.dir("probe-cassnap")
-        val fsT = s"file:$root/fs-man"
-        chainOf("fs_man",
-          () => { Snapshots.commit(base, fsT): Unit },
-          i => {
-            val t0 = System.nanoTime()
-            val v = Snapshots.commitAppend(batch(i), fsT, carry = Snapshots.CarryManifest)
-            ((System.nanoTime() - t0) / 1e9, Snapshots.carriedFileCount(fsT, v))
-          },
-          () => {
-            val t0 = System.nanoTime()
-            val (vComp, nFiles) = Compact.compactVersion(spark, fsT, 512L * 1024 * 1024)
-            ((System.nanoTime() - t0) / 1e9, s"re-based at v=$vComp -> $nFiles files")
-          })
-        val casT = s"mock3c:$root/cas"
-        chainOf("cas_mock3c",
-          () => { CasSnapshots.commit(base, casT): Unit },
-          i => {
-            val t0 = System.nanoTime()
-            val v = CasSnapshots.commitAppend(batch(i), casT)
-            ((System.nanoTime() - t0) / 1e9, CasSnapshots.carriedFileCount(casT, v))
-          },
-          () => {
-            val t0 = System.nanoTime()
-            val (v2, into) = CasSnapshots.compact(spark, casT, 512L * 1024 * 1024)
-            ((System.nanoTime() - t0) / 1e9, s"re-based at v=$v2 -> $into files")
-          })
-      }
       // --pccache — the plan cache's store-protocol price (r18): one
       // cold attach (compute + publish) and one warm attach (key derive
       // + read) of the SAME plan on each of the three store classes —
@@ -749,8 +599,8 @@ object ScaleProbe {
         import graft.sources.{ArtifactIo, PlanCache, RenameByCopyMockFs}
         val hc = spark.sparkContext.hadoopConfiguration
         hc.set("fs.mock3a.impl", classOf[RenameByCopyMockFs].getName)
-        // additive — a plain set would deregister --cassnap's mock3c in
-        // the same session conf
+        // additive — a plain set would deregister another registration
+        // in the same session conf
         ArtifactIo.addExtraScheme(hc, ArtifactIo.RenameByCopyExtraSchemesKey, "mock3a")
         val root = graft.queries.QueryTmp.dir("probe-pccache")
         def plan() = Tables.load(spark, sfDir, "orders")

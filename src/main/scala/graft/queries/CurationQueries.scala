@@ -48,10 +48,10 @@ object CurationQueries {
     // Dataset snapshot versioning — the reproducibility contract: the
     // corpus commits as v1, mg1's upsert commits as v2, and BOTH
     // versions are read back PINNED (not latest) and aggregated with a
-    // version tag. Immutable versions + an atomically-renamed _latest
-    // pointer; a v2 commit that touched v1's files, or a pinned read
-    // that resolved to the wrong version, shifts a v1 row and fails
-    // the hash.
+    // version tag. Immutable versions, each published by one
+    // conditional PUT of its `_log/N` record; a v2 commit that touched
+    // v1's files, or a pinned read that resolved to the wrong version,
+    // shifts a v1 row and fails the hash.
     "tv1_snapshot_versions" -> { (s, dir) =>
       import graft.sources.Snapshots
       val table = QueryTmp.dir("snap") + "/docs"
@@ -74,12 +74,12 @@ object CurationQueries {
     },
 
     // Snapshot ROLLBACK (the lakehouse RESTORE verb): corpus commits v1,
-    // a bad filter commits v2, rollbackTo(v1) publishes v3 whose data is
-    // v1's files hard-link-carried forward — zero data rewrite, history
-    // immutable. The gate reads the LATEST (must be the restored v1
-    // content, version-tagged with the pointer read back — a rollback
-    // that failed to publish tags 2 and fails the hash) and v2 PINNED
-    // (rollback must not touch intermediate history).
+    // a bad filter commits v2, rollbackTo(v1) publishes v3 whose record
+    // names v1's files — zero data movement, history immutable. The gate
+    // reads the LATEST (must be the restored v1 content, version-tagged
+    // with the latest version read back — a rollback that failed to
+    // publish tags 2 and fails the hash) and v2 PINNED (rollback must
+    // not touch intermediate history).
     "tv2_snapshot_rollback" -> { (s, dir) =>
       import graft.sources.Snapshots
       val table = QueryTmp.dir("snaprb") + "/docs"
@@ -99,21 +99,21 @@ object CurationQueries {
 
     // Incremental changed-data feed (readChanges): corpus commits v1, two
     // batches APPEND, with a content-preserving compaction
-    // (dataChange = false) between them. The feed walks the recorded base
-    // chain and reads ONLY each step's delta manifest — O(delta bytes)
-    // scanned, never the table. since=1 must be exactly batch2 + batch3:
+    // (dataChange = false) between them. The feed walks the records'
+    // base chain and reads ONLY each append's own files — O(delta
+    // bytes) scanned, never the table. since=1 must be exactly batch2 + batch3:
     // the compaction step contributes an EMPTY delta (a maintenance
     // rewrite replayed into the feed would double every carried row and
     // fail the hash). since=2 consumes from the compaction version
     // itself — batch3 alone.
     "tv3_snapshot_changes" -> { (s, dir) =>
-      import graft.sources.{Compact, Snapshots}
+      import graft.sources.Snapshots
       val table = QueryTmp.dir("snapcdc") + "/docs"
       val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
       val v1 = Snapshots.commit(docs, table)
       Snapshots.commitAppend(docs.filter(col("doc_id") % 10 === 3)
         .withColumn("doc_id", col("doc_id") + 10000000L), table)
-      val (vc, _) = Compact.compactVersion(s, table, targetBytes = 1L << 30)
+      val (vc, _) = Snapshots.compact(s, table, targetBytes = 1L << 30)
       Snapshots.commitAppend(docs.filter(col("doc_id") % 10 === 7)
         .withColumn("doc_id", col("doc_id") + 20000000L), table)
       def agg(df: DataFrame, since: Int) = df.groupBy(col("lang")).agg(
@@ -127,22 +127,21 @@ object CurationQueries {
     },
 
     // Snapshots on the FileSystem-abstracted store (ii12's lakehouse
-    // twin, r17): the tv3 composition — commit, tagged-append, a
-    // dataChange=false compactVersion between two appends, readChanges
+    // twin): the tv3 composition — commit, tagged-append, a
+    // dataChange=false compaction between two appends, readChanges
     // from both baselines — with the tableDir on a file:-scheme'd path,
-    // so every Snapshots primitive (claim rename, pointer-lock publish,
-    // carry-forward (byte copy on Hadoop stores — no hard links), delta
-    // manifests, the CDF chain walk, compaction byte accounting) runs
-    // through HadoopArtifactIo instead of java.nio. Same full-replay
-    // oracle as tv3: the store must be invisible.
+    // so every Snapshots primitive (staging, the `_log/N` conditional
+    // PUT, record reads, the CDF chain walk, compaction byte
+    // accounting) runs through HadoopArtifactIo instead of java.nio.
+    // Same full-replay oracle as tv3: the store must be invisible.
     "tv4_fs_snapshots" -> { (s, dir) =>
-      import graft.sources.{Compact, Snapshots}
+      import graft.sources.Snapshots
       val table = "file:" + QueryTmp.dir("snapfs") + "/docs"
       val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
       val v1 = Snapshots.commit(docs, table)
       Snapshots.commitAppend(docs.filter(col("doc_id") % 10 === 3)
         .withColumn("doc_id", col("doc_id") + 10000000L), table, tag = Some("batch-1")): Unit
-      val (vc, _) = Compact.compactVersion(s, table, targetBytes = 1L << 30)
+      val (vc, _) = Snapshots.compact(s, table, targetBytes = 1L << 30)
       Snapshots.commitAppend(docs.filter(col("doc_id") % 10 === 7)
         .withColumn("doc_id", col("doc_id") + 20000000L), table, tag = Some("batch-2")): Unit
       def agg(df: DataFrame, since: Int) = df.groupBy(col("lang")).agg(
@@ -155,29 +154,26 @@ object CurationQueries {
         .select(col("since"), col("lang"), col("n"), col("chars"), col("id_sum"))
     },
 
-    // Manifest-carry appends (the r17 O(batch)-on-any-store tier): the
-    // tv4 composition with carry = CarryManifest on a file:-scheme'd
-    // table — each append writes ONLY its batch plus a _graft_carry
-    // manifest naming the inherited files; compactVersion resolves the
-    // manifest (re-basing the chain self-contained) and the CDF feed
-    // walks through it with an empty delta. Three oracle legs: the
-    // since-v1 feed, the since-compaction feed, and a PINNED READ of
-    // the manifest version itself (read must resolve own + carried
-    // files exactly — a dropped carried file, a double-resolved
-    // fragment, or a manifest that missed the base's own files all
-    // fail the hash).
+    // Carried-by-name appends (O(batch) on any store): the tv4
+    // composition on a file:-scheme'd table — each append writes ONLY
+    // its batch, and its commit record names the inherited files;
+    // compaction resolves the record (re-basing the chain
+    // self-contained) and the CDF feed walks through it with an empty
+    // delta. Three oracle legs: the since-v1 feed, the since-compaction
+    // feed, and a PINNED READ of the carrying version itself (read must
+    // resolve own + carried files exactly — a dropped carried file, a
+    // double-resolved fragment, or a record that missed the base's own
+    // files all fail the hash).
     "tv5_manifest_appends" -> { (s, dir) =>
-      import graft.sources.{Compact, Snapshots}
+      import graft.sources.Snapshots
       val table = "file:" + QueryTmp.dir("snapman") + "/docs"
       val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
       val v1 = Snapshots.commit(docs, table)
       val v2 = Snapshots.commitAppend(docs.filter(col("doc_id") % 10 === 3)
-        .withColumn("doc_id", col("doc_id") + 10000000L), table,
-        carry = Snapshots.CarryManifest)
-      val (vc, _) = Compact.compactVersion(s, table, targetBytes = 1L << 30)
+        .withColumn("doc_id", col("doc_id") + 10000000L), table)
+      val (vc, _) = Snapshots.compact(s, table, targetBytes = 1L << 30)
       Snapshots.commitAppend(docs.filter(col("doc_id") % 10 === 7)
-        .withColumn("doc_id", col("doc_id") + 20000000L), table,
-        carry = Snapshots.CarryManifest): Unit
+        .withColumn("doc_id", col("doc_id") + 20000000L), table): Unit
       def agg(df: DataFrame, since: Int) = df.groupBy(col("lang")).agg(
           count(lit(1)).as("n"),
           sum(length(col("text"))).as("chars"),
@@ -189,26 +185,25 @@ object CurationQueries {
         .select(col("since"), col("lang"), col("n"), col("chars"), col("id_sum"))
     },
 
-    // SNAPSHOTS ON A CONDITIONAL-PUT OBJECT STORE (r19 — the CAS
-    // admission proof, the pc1 playbook applied to the one family r18
-    // left decision-recorded): the tv5 composition — replace commit,
-    // tagged manifest-carry append, a dataChange=false maintenance
+    // SNAPSHOTS ON A CONDITIONAL-PUT OBJECT STORE (the CAS admission
+    // proof, the pc1 playbook): the tv5 composition — replace commit,
+    // tagged carried-by-name append, a dataChange=false maintenance
     // rewrite (compaction shape, CAS-guarded by commitIfLatest), a
     // second tagged append, both CDF feeds, and a pinned read of the
-    // manifest version — run against `mock3c:` (graft.sources
+    // carrying version — run against `mock3c:` (graft.sources
     // .ConditionalPutMockFs), a store whose rename REALLY is copy+delete
     // and whose ONLY extra primitive over mock3a is an If-None-Match PUT
-    // verdict-atomic at close. CasSnapshots' log-is-the-pointer protocol
-    // (each commit = ONE conditional PUT of _log/N; claim and publish
-    // the same atomic op — no locks, no orphan roll-forward) must serve
-    // the identical feed as the rename-store protocols. Two contract
+    // verdict-atomic at close. The log-is-the-pointer protocol (each
+    // commit = ONE conditional PUT of _log/N; claim and publish the same
+    // atomic op — no locks, no orphan roll-forward) must serve the
+    // identical feed as on the local and file: stores. Two contract
     // booleans ride along: a REPLAYED tagged batch returns its committed
     // version without writing (exactly-once by CAS-linearized tag scan),
     // and the version sequence is contiguous 1..4 (the log slots ARE the
     // versions). Rename/lock-dependent families keep rejecting this
     // store — ArtifactIoSpec/CasSnapshotsSpec pin that side.
     "tv6_cas_object_store" -> { (s, dir) =>
-      import graft.sources.{ArtifactIo, CasSnapshots, ConditionalPutMockFs}
+      import graft.sources.{ArtifactIo, ConditionalPutMockFs, Snapshots}
       val hc = s.sparkContext.hadoopConfiguration
       hc.set("fs.mock3c.impl", classOf[ConditionalPutMockFs].getName)
       ArtifactIo.addExtraScheme(hc, ArtifactIo.RenameByCopyExtraSchemesKey, "mock3c")
@@ -217,21 +212,21 @@ object CurationQueries {
       val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
       def batch1 = docs.filter(col("doc_id") % 10 === 3)
         .withColumn("doc_id", col("doc_id") + 10000000L)
-      val v1 = CasSnapshots.commit(docs, table)
-      val v2 = CasSnapshots.commitAppend(batch1, table, tag = Some("batch-1"))
-      val replayV = CasSnapshots.commitAppend(batch1, table, tag = Some("batch-1"))
-      val vc = CasSnapshots.commitIfLatest(CasSnapshots.read(s, table), table,
+      val v1 = Snapshots.commit(docs, table)
+      val v2 = Snapshots.commitAppend(batch1, table, tag = Some("batch-1"))
+      val replayV = Snapshots.commitAppend(batch1, table, tag = Some("batch-1"))
+      val vc = Snapshots.commitIfLatest(Snapshots.read(s, table), table,
         expectedBase = v2, dataChange = false).get
-      val v4 = CasSnapshots.commitAppend(docs.filter(col("doc_id") % 10 === 7)
+      val v4 = Snapshots.commitAppend(docs.filter(col("doc_id") % 10 === 7)
         .withColumn("doc_id", col("doc_id") + 20000000L), table, tag = Some("batch-2"))
       def agg(df: DataFrame, since: Int) = df.groupBy(col("lang")).agg(
           count(lit(1)).as("n"),
           sum(length(col("text"))).as("chars"),
           sum(col("doc_id")).as("id_sum"))
         .withColumn("since", lit(since))
-      agg(CasSnapshots.readChanges(s, table, v1), 1)
-        .unionByName(agg(CasSnapshots.readChanges(s, table, vc), 2))
-        .unionByName(agg(CasSnapshots.read(s, table, Some(v2)), 3))
+      agg(Snapshots.readChanges(s, table, v1), 1)
+        .unionByName(agg(Snapshots.readChanges(s, table, vc), 2))
+        .unionByName(agg(Snapshots.read(s, table, Some(v2)), 3))
         .withColumn("replay_idempotent", lit(replayV == v2))
         .withColumn("contiguous", lit(v1 == 1 && v2 == 2 && vc == 3 && v4 == 4))
         .select(col("since"), col("lang"), col("n"), col("chars"), col("id_sum"),
@@ -287,7 +282,7 @@ object CurationQueries {
     // per-ingest-batch distribution check a continuously-fed corpus runs,
     // scanning only the delta on the feed side. The oracle replays both
     // slices from the source corpus, so the snapshot plumbing (pin +
-    // delta manifest) sits under the hash.
+    // the append record's delta) sits under the hash.
     "dr2_feed_drift" -> { (s, dir) =>
       import graft.operators.Drift
       import graft.sources.Snapshots
@@ -993,7 +988,7 @@ object CurationQueries {
          UNION ALL
          SELECT 2, lang, count(*)::BIGINT, sum(len(text))::BIGINT, sum(doc_id)::BIGINT
          FROM b3 GROUP BY lang""",
-    // the tv3 replay plus a pinned read of the manifest version itself
+    // the tv3 replay plus a pinned read of the carrying version itself
     // (base ∪ batch-2 exactly — resolution must be complete and
     // duplicate-free)
     "tv5_manifest_appends" ->

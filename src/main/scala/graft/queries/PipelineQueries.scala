@@ -108,20 +108,20 @@ object PipelineQueries {
     },
 
     // cp1's live-table tier: the fragmented table is a Snapshots version
-    // and compaction lands in a NEW version behind the atomic _latest
-    // pointer — no in-place swap, no path-missing window, pinned readers
-    // untouched. Content fidelity under the hash; the contract boolean
-    // pins version advance + file-count reduction.
+    // and compaction lands in a NEW version published by one
+    // conditional PUT — no in-place swap, no path-missing window, pinned
+    // readers untouched. Content fidelity under the hash; the contract
+    // boolean pins version advance + file-count reduction.
     "cp2_compact_version" -> { (s, dir) =>
-      import graft.sources.{Compact, Snapshots}
+      import graft.sources.Snapshots
       val table = tmpDir("compactv") + "/docs"
       Snapshots.commit(
         Tables.load(s, dir, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
           .repartition(64), table)
-      val before = Compact.dataFileCount(s"$table/v=1")
+      val (before, bytes) = Snapshots.resolvedStats(table, 1)
       // data-scaled target: see cp1
-      val (newV, after) = Compact.compactVersion(s, table,
-        targetBytes = math.max(1L << 20, Compact.dataBytes(s"$table/v=1") / 8))
+      val (newV, after) = Snapshots.compact(s, table,
+        targetBytes = math.max(1L << 20, bytes / 8))
       Snapshots.read(s, table)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
@@ -442,9 +442,9 @@ object PipelineQueries {
     // half — the reference paper §6.2 loop closed: live ingest →
     // snapshot versions → cp2 compaction → pinned readers). The staged
     // drop dir streams in 4 one-file micro-batches through SnapshotSink;
-    // each batch commits one FULL-table Snapshots version (hard-link
-    // carry-forward, O(batch) bytes written), exactly-once by batch-id
-    // tag. Gate: the final version's rollup equals the batch oracle
+    // each batch commits one FULL-table Snapshots version (inherited
+    // files carried by name, O(batch) bytes written), exactly-once by
+    // batch-id tag. Gate: the final version's rollup equals the batch oracle
     // under the driver hash, plus contract booleans — one version per
     // micro-batch landed, and a replayed batch tag (the crash-recovery
     // path) committed NOTHING.

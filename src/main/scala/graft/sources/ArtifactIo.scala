@@ -21,12 +21,14 @@ import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, Options, P
   * the artifact commit protocol is temp-file + atomic rename and
   * create-exclusive lock files, and a store that renames by copy+delete
   * would turn every "atomic" sidecar swap into a torn-read window. The
-  * remediation is to HOME the artifact (or Snapshots table — same
-  * requirement) on a rename-atomic store: `hdfs://`, `abfss://` with a
-  * hierarchical namespace, or a scheme-less local/NFS path. The one
-  * family with a rename-free commit protocol is the plan cache —
-  * [[ArtifactIo.forCachePath]] admits rename-by-copy schemes there
-  * (manifest-last publish, no locks; see [[ObjectStoreArtifactIo]]).
+  * remediation is to HOME the artifact on a rename-atomic store:
+  * `hdfs://`, `abfss://` with a hierarchical namespace, or a scheme-less
+  * local/NFS path. Two families have rename-free commit protocols: the
+  * plan cache — [[ArtifactIo.forCachePath]] admits rename-by-copy
+  * schemes there (manifest-last publish, no locks; see
+  * [[ObjectStoreArtifactIo]]) — and [[Snapshots]], whose
+  * [[ArtifactIo.forSnapshotPath]] admits object stores declared to have
+  * conditional writes.
   *
   * ONE path string must mean ONE location and ONE protocol everywhere it
   * is read: `/data/x` (LocalIo, OS locks) and `file:/data/x` (HadoopIo,
@@ -75,27 +77,21 @@ private[graft] sealed trait ArtifactIo {
     */
   def rename(src: String, dst: String): Unit
 
-  /** Plain create-or-truncate write (NOT atomic — pair with
-    * [[renameReplace]] for the temp-then-publish protocol when the temp
-    * name matters to a debris sweep; use [[writeAtomic]] otherwise).
+  /** Plain create-or-truncate write (NOT atomic — use [[writeAtomic]]
+    * when a reader may race the write).
     */
   def writeFile(path: String, bytes: Array[Byte]): Unit
 
-  /** Atomic move that REPLACES an existing destination (the pointer
-    * publish primitive).
-    */
-  def renameReplace(src: String, dst: String): Unit
-
   /** Atomic no-replace move returning `false` when the destination
-    * already exists (the version-claim primitive — the caller advances
-    * and retries).
+    * already exists (the plan cache's entry-claim primitive — on
+    * `false` the caller checks for a peer's published entry).
     *
     * No-replace atomicity contract: the local impl is true `ATOMIC_MOVE`
     * (and the Hadoop impl special-cases `file:` down to it — Hadoop's
     * `FileContext.rename(NONE)` on local stores is an exists-check THEN
     * rename, a TOCTOU). On real HDFS-family stores the namespace rename
-    * is atomic. Directory-destination callers (the version/entry claims)
-    * are safe everywhere: even a raced check degrades to an `ENOTEMPTY`
+    * is atomic. Directory-destination callers (the entry claims) are
+    * safe everywhere: even a raced check degrades to an `ENOTEMPTY`
     * failure (caught, `false`) rather than a replace. FILE destinations
     * differ per store: POSIX rename silently REPLACES a file (which is
     * why the LOCAL [[tryPutIfAbsent]] uses `link(2)`, not this), while
@@ -107,13 +103,12 @@ private[graft] sealed trait ArtifactIo {
     */
   def tryRenameNoReplace(src: String, dst: String): Boolean
 
-  /** Whether this store's [[rename]]/[[renameReplace]]/
-    * [[tryRenameNoReplace]] are atomic namespace operations (true for
-    * the local and HDFS-family impls). False means rename is
-    * copy+delete and lock files are unavailable — only protocols written
-    * rename-free and lock-free (the plan cache's manifest-last publish)
-    * may run on such a store; everything else is rejected at
-    * [[ArtifactIo.forPath]].
+  /** Whether this store's [[rename]]/[[tryRenameNoReplace]] are atomic
+    * namespace operations (true for the local and HDFS-family impls).
+    * False means rename is copy+delete and lock files are unavailable —
+    * only protocols written rename-free and lock-free (the plan cache's
+    * manifest-last publish, the snapshot log) may run on such a store;
+    * everything else is rejected at [[ArtifactIo.forPath]].
     */
   def renameAtomic: Boolean = true
 
@@ -135,7 +130,7 @@ private[graft] sealed trait ArtifactIo {
     * [[ArtifactIo.ConditionalPutExtraSchemesKey]] map it to
     * `create(overwrite = false)` — the If-None-Match PUT, verdict atomic
     * at close ([[CasObjectStoreArtifactIo]]). This is the ONE primitive
-    * [[CasSnapshots]]' commit protocol builds on.
+    * [[Snapshots]]' commit protocol builds on.
     */
   def tryPutIfAbsent(path: String, bytes: Array[Byte]): Boolean
 
@@ -228,7 +223,7 @@ private[graft] object ArtifactIo {
     * grew conditional-create support only in recent 3.4.x releases,
     * behind its own flag). Declaring a scheme here asserts that
     * end-to-end guarantee; [[forSnapshotPath]] then admits it through
-    * [[CasObjectStoreArtifactIo]] for [[CasSnapshots]]' CAS log
+    * [[CasObjectStoreArtifactIo]] for [[Snapshots]]' CAS log
     * protocol. A false declaration silently reverts the commit CAS to
     * check-then-act — exactly the lost-update the protocol exists to
     * prevent — so declare it only for verified endpoints. The tv6 gate
@@ -313,7 +308,7 @@ private[graft] object ArtifactIo {
     case _ => LocalArtifactIo
   }
 
-  /** [[forPath]] for [[CasSnapshots]] tables ONLY: additionally admits
+  /** [[forPath]] for [[Snapshots]] tables ONLY: additionally admits
     * rename-by-copy object-store schemes IF the deployment declared
     * atomic conditional writes for them
     * ([[ConditionalPutExtraSchemesKey]]) — via
@@ -352,9 +347,8 @@ private[graft] object ArtifactIo {
             "endpoint AND its Hadoop connector honor conditional creates (S3 " +
             "since Nov 2024, GCS/Azure Blob always, with a connector that sends " +
             s"the precondition), declare the scheme under " +
-            s"'$ConditionalPutExtraSchemesKey'; otherwise home the table on a " +
-            "rename-atomic store (hdfs://, abfss://, or a local path) and use " +
-            "graft.sources.Snapshots")
+            s"'$ConditionalPutExtraSchemesKey'; otherwise home the " +
+            "graft.sources.Snapshots table on an hdfs://, abfss:// or local path")
         new CasObjectStoreArtifactIo(conf)
       } else forPath(path)
     case _ => LocalArtifactIo
@@ -415,11 +409,6 @@ private[graft] object LocalArtifactIo extends ArtifactIo {
 
   def writeFile(path: String, bytes: Array[Byte]): Unit = {
     Files.write(Paths.get(path), bytes): Unit
-  }
-
-  def renameReplace(src: String, dst: String): Unit = {
-    Files.move(Paths.get(src), Paths.get(dst),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING): Unit
   }
 
   def tryRenameNoReplace(src: String, dst: String): Boolean =
@@ -518,7 +507,7 @@ private[graft] object LocalArtifactIo extends ArtifactIo {
     * forensics, i.e. the same directory is concurrently operated under
     * `file:/dir` (create-exclusive lock files, which this OS lock does
     * NOT exclude against — proceeding would mean zero mutual exclusion:
-    * lost sidecar updates, double pointer publishes). Fail loudly at the
+    * lost sidecar updates, interleaved appends). Fail loudly at the
     * moment of the mix instead; the doctrine is one path form per store.
     * Best-effort by nature (the foreign holder writes its forensics an
     * instant after its create), but any steady mixed use trips it.
@@ -623,11 +612,6 @@ private[graft] class HadoopArtifactIo(conf: Configuration) extends ArtifactIo {
     val p = new HPath(path)
     val out = fs(p).create(p, true)
     try out.write(bytes) finally out.close()
-  }
-
-  def renameReplace(src: String, dst: String): Unit = {
-    val d = new HPath(dst)
-    fc(d).rename(new HPath(src), d, Options.Rename.OVERWRITE)
   }
 
   def tryRenameNoReplace(src: String, dst: String): Boolean = {
@@ -856,8 +840,8 @@ private[graft] class HadoopArtifactIo(conf: Configuration) extends ArtifactIo {
   * WITHOUT the temp+rename dance that would be copy+delete underneath);
   * what they do NOT give is atomic rename (copy+delete: a mid-crash
   * leaves both names, a racing reader sees partial copies) or
-  * create-exclusive lock files — hence [[rename]]/[[renameReplace]]/
-  * [[tryRenameNoReplace]]/[[withLock]]/[[tryWithLock]] throw.
+  * create-exclusive lock files — hence [[rename]]/[[tryRenameNoReplace]]/
+  * [[withLock]]/[[tryWithLock]] throw.
   */
 private[graft] class ObjectStoreArtifactIo(conf: Configuration)
     extends HadoopArtifactIo(conf) {
@@ -867,17 +851,14 @@ private[graft] class ObjectStoreArtifactIo(conf: Configuration)
   private def unsupported(op: String): Nothing =
     throw new UnsupportedOperationException(
       s"object store: $op is not available on rename-by-copy stores — only the " +
-        "plan cache's rename-free, lock-free protocol runs here; artifact and " +
-        "Snapshots families need a rename-atomic store (hdfs://, abfss://, or a " +
-        "scheme-less local/NFS path)")
+        "plan cache's and the snapshot log's rename-free, lock-free protocols run " +
+        "here; the other artifact families need a rename-atomic store (hdfs://, " +
+        "abfss://, or a scheme-less local/NFS path)")
 
   override def writeAtomic(path: String, bytes: Array[Byte]): Unit =
     writeFile(path, bytes) // whole-object PUT: atomic at close by store contract
 
   override def rename(src: String, dst: String): Unit = unsupported("rename")
-
-  override def renameReplace(src: String, dst: String): Unit =
-    unsupported("renameReplace")
 
   override def tryRenameNoReplace(src: String, dst: String): Boolean =
     unsupported("tryRenameNoReplace")
@@ -926,7 +907,7 @@ private[graft] class ObjectStoreArtifactIo(conf: Configuration)
   * close: exactly one racing writer's whole object lands, losers get
   * `FileAlreadyExistsException` with the name untouched. Rename and
   * locks STILL throw (conditional writes do not make rename atomic) —
-  * [[CasSnapshots]] is the protocol written for exactly this primitive
+  * [[Snapshots]] is the protocol written for exactly this primitive
   * set; reached only via [[ArtifactIo.forSnapshotPath]].
   */
 private[graft] final class CasObjectStoreArtifactIo(conf: Configuration)

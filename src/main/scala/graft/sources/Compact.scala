@@ -8,15 +8,13 @@ import org.apache.spark.sql.SparkSession
   * files tax the scan planner and the namenode): rewrite a parquet
   * directory into ~`targetBytes` files.
   *
-  * Two entry points. [[compactVersion]] is the DEFAULT for live tables:
-  * it compacts a [[Snapshots]] table's latest version into a NEW version
-  * behind the atomic `_latest` pointer — concurrent readers see the old
-  * version or the new one, never a missing path, and pinned readers are
-  * untouched (version data is immutable). Plain [[compact]] is the
-  * quiesced-directory tool: it swaps IN PLACE via two renames with
-  * rollback on failure, and a reader racing the swap can observe a brief
-  * path-missing window (one rename wide) — use it only on directories
-  * nothing is actively reading.
+  * This is the quiesced-directory tool: it swaps IN PLACE via two
+  * renames with rollback on failure, and a reader racing the swap can
+  * observe a brief path-missing window (one rename wide) — use it only
+  * on directories nothing is actively reading. Live tables compact
+  * through [[Snapshots.compact]] instead: the rewrite lands as a NEW
+  * version, so concurrent readers see the old version or the new one,
+  * never a missing path, and pinned readers are untouched.
   *
   * Scale shape: one full read + one exchange-free write when shrinking
   * (coalesce — partitions merge map-side, no shuffle); the publish is
@@ -26,8 +24,7 @@ import org.apache.spark.sql.SparkSession
 object Compact {
 
   /** The store-appropriate primitives for `path` (scheme-less → local
-    * `java.nio` verbatim; rename-atomic scheme'd stores → Hadoop io —
-    * the [[Snapshots]] store contract, shared).
+    * `java.nio` verbatim; rename-atomic scheme'd stores → Hadoop io).
     */
   private def io(path: String): ArtifactIo = ArtifactIo.forPath(path)
 
@@ -68,50 +65,6 @@ object Compact {
     }
     fs.deleteTree(old)
     dataFileCount(path)
-  }
-
-  /** Compact a [[Snapshots]] table's latest version into a NEW snapshot
-    * version: read `v=latest`, rewrite at ~`targetBytes` files, commit as
-    * the next version (atomic pointer publish — no path-missing window,
-    * old versions untouched for pinned readers). Returns (newVersion,
-    * dataFileCount). Publishes through `Snapshots.commitIfLatest` — a
-    * data commit landing between the base read and the publish would
-    * otherwise be silently shadowed by this rewrite of OLDER content;
-    * on a lost race the rewrite is discarded and retried against the new
-    * base. Retention of the fat predecessor stays an explicit
-    * `Snapshots.drop`, as for any other version.
-    */
-  def compactVersion(spark: SparkSession, tableDir: String, targetBytes: Long): (Int, Int) = {
-    require(targetBytes > 0, "targetBytes must be positive")
-    var attempts = 0
-    while (attempts < 5) {
-      val v = Snapshots.latestVersion(tableDir)
-        .getOrElse(throw new IllegalArgumentException(s"no committed version under $tableDir"))
-      // RESOLVED accounting + read: a CarryManifest version's directory
-      // holds only its own batch — the compaction must see (and rewrite)
-      // the full inherited file set. Identical numbers to the plain
-      // directory listing for a self-contained version. The rewrite is
-      // always self-contained, so compaction RE-BASES a manifest chain —
-      // after it, retention can reclaim the referenced predecessors.
-      val (cnt, bytes) = Snapshots.resolvedStats(tableDir, v)
-      val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-      // already at (or under) the target layout: a scheduled compaction
-      // on a compacted table must not re-read the corpus and accrete a
-      // redundant version per run — UNLESS the version carries a
-      // manifest, where the rewrite is also the re-base that frees its
-      // referenced predecessors for retention
-      if (cnt <= n && !Snapshots.hasCarry(tableDir, v)) return (v, cnt)
-      // dataChange = false: the rewrite holds the same rows as its base,
-      // so an incremental feed (Snapshots.readChanges) walks through the
-      // compaction with an empty delta instead of re-baselining
-      Snapshots.commitIfLatest(Snapshots.read(spark, tableDir, Some(v)).coalesce(n),
-          tableDir, v, dataChange = false) match {
-        case Some(newV) => return (newV, dataFileCount(s"$tableDir/v=$newV"))
-        case None       => attempts += 1 // base moved — re-read and retry
-      }
-    }
-    throw new IllegalStateException(
-      s"compactVersion: lost the publish race $attempts times under concurrent commits on $tableDir")
   }
 
   /** True if the directory uses a hive-style `col=value/` partition layout. */

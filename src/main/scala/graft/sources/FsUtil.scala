@@ -36,9 +36,9 @@ private[graft] object FsUtil {
     * holder's OS lock releases automatically, so no grace heuristics.
     * Bounded wait: a holder that outlives `timeoutMs` fails THIS caller
     * loudly (never the holder), naming the lock file and appending
-    * `timeoutHint`. Shared by the snapshots pointer lock, the scored-index
-    * append lock, and the sketch-artifact append lock — one copy so a
-    * contention-handling fix cannot silently miss a site.
+    * `timeoutHint`. Shared by the scored-index append lock and the
+    * sketch-artifact append lock — one copy so a contention-handling fix
+    * cannot silently miss a site.
     */
   def withFileLock[A](lockPath: Path, timeoutMs: Long, what: String,
       timeoutHint: String)(body: => A): A = {

@@ -156,7 +156,7 @@ class RenameByCopyMockFs extends RawLocalFileSystem {
   * at close — exactly one of N racing writers of a name wins, the losers
   * observe `FileAlreadyExistsException` from `close()` with the
   * destination untouched. That single primitive is a compare-and-swap on
-  * object existence, and it is ALL [[CasSnapshots]]' log-is-the-pointer
+  * object existence, and it is ALL [[Snapshots]]' log-is-the-pointer
   * commit protocol uses — proving the protocol never reaches for rename
   * atomicity or locks (gate tv6, CasSnapshotsSpec).
   *

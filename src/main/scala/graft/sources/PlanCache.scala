@@ -34,9 +34,10 @@ import org.apache.spark.sql.DataFrame
   * whole-object PUT, atomic at close), then `_SUCCESS`. Readers resolve
   * the manifest instead of listing the directory, so a loser's orphan
   * part files are never read (the retention sweep reclaims the entry
-  * wholesale). Every OTHER artifact family (indexes, sketches,
-  * Snapshots) keeps the strict rename-atomic allowlist — their commit
-  * protocols genuinely need atomic rename + create-exclusive. The
+  * wholesale). The index and sketch families keep the strict
+  * rename-atomic allowlist — their commit protocols genuinely need
+  * atomic rename + create-exclusive ([[Snapshots]] needs only a
+  * conditional PUT, see [[ArtifactIo.forSnapshotPath]]). The
   * cached artifact is plain parquet: readers get predicate pushdown and
   * column pruning ON TOP of the cache, which the reference's opaque
   * serialized partition blobs cannot offer.

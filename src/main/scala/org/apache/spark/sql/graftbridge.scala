@@ -59,10 +59,13 @@ object graftbridge {
     * only the ≤ k buffer entries are copied (guide: eliminate
     * non-codegen closures on the hot path).
     *
-    * Ordering note: doubles compare by Spark's SQL ordering (NaN
-    * greatest; -0.0 < 0.0 via java.lang.Double.compare inside the
-    * interpreted struct ordering) — identical to the Scala
-    * `Ordering.Double.TotalOrdering` the typed heap used.
+    * Ordering note: doubles compare by Spark's SQL ordering — NaN
+    * greatest, but -0.0 and 0.0 compare EQUAL (`SQLOrderingUtil
+    * .compareDoubles`), so the next struct field breaks their tie. That
+    * matches DuckDB's ORDER BY and differs from the Scala
+    * `Ordering.Double.TotalOrdering` of the typed `TopKAgg` (-0.0 < 0.0)
+    * only on signed-zero ties; ScaleOpsSpec pins the signed-zero and
+    * NaN cases.
     */
   def collectTopK(sortKey: Column, num: Int): Column =
     column(new catalyst.expressions.aggregate.CollectTopK(expression(sortKey), num, true, 0, 0)

@@ -106,6 +106,31 @@ class ScaleOpsSpec extends SparkSuite {
     }
   }
 
+  test("collectTopK ranks -0.0 level with 0.0 (the next field decides) and NaN above " +
+      "every number") {
+    // Spark's SQL double ordering, NOT Scala's TotalOrdering: the signed
+    // zeros compare equal (as in DuckDB's ORDER BY), so the id breaks
+    // the tie; NaN sorts after every number. Keys come back unnormalized.
+    val rows = Seq(
+      ("z", Double.NaN, 1001L), ("z", 0.0, 1002L), ("z", -0.0, 1003L),
+      ("z", 2.0, 1004L), ("z", Double.NaN, 1005L), ("z", -0.0, 1000L),
+      ("n", Double.NaN, 1L), ("n", 7.0, 2L), ("n", Double.NegativeInfinity, 3L))
+    val native = rows.toDF("g", "key", "id").repartition(8).groupBy(col("g"))
+      .agg(org.apache.spark.sql.graftbridge.collectTopK(
+        struct(col("key").as("_1"), col("id").as("_2")), 5).as("top"))
+      .collect().map(r => r.getString(0) ->
+        r.getSeq[org.apache.spark.sql.Row](1).map(t => (t.getDouble(0), t.getLong(1)))).toMap
+    // compare key BITS: `==` would equate -0.0 with 0.0 and never NaN with NaN
+    def bits(ts: Seq[(Double, Long)]) =
+      ts.map { case (k, id) => (java.lang.Double.doubleToLongBits(k), id) }.toList
+    assert(bits(native("z")) ==
+      bits(Seq((-0.0, 1000L), (0.0, 1002L), (-0.0, 1003L), (2.0, 1004L), (Double.NaN, 1001L))),
+      native("z").toString)
+    assert(bits(native("n")) ==
+      bits(Seq((Double.NegativeInfinity, 3L), (7.0, 2L), (Double.NaN, 1L))),
+      native("n").toString)
+  }
+
   test("MinHashUnionAgg merges signatures element-wise min") {
     val agg = new Aggregators.MinHashUnionAgg(4)
     val sigs = Seq(Seq(5L, 1L, 9L, 7L), Seq(3L, 2L, 8L, 9L)).toDS()

@@ -75,17 +75,16 @@ class SnapshotSinkSpec extends SparkSuite {
   }
 
   test("manifest-carry sink on a file:-scheme'd table: O(batch) triggers, same prefixes, no restart dupes") {
-    // the object-store shape end to end: Hadoop-backed io (file:) AND
-    // CarryManifest per micro-batch — each version dir holds only its
-    // batch, reads resolve the manifest, restart replays append nothing
+    // the Hadoop-backed io (file:) end to end: each micro-batch stages
+    // only its own files, its commit record names the inherited ones,
+    // reads resolve the record, restart replays append nothing
     val src = Files.createTempDirectory("snap-sinkm-src").toString
     val table = "file:" + Files.createTempDirectory("snap-sinkm-tbl").toString + "/t"
     val ckpt = Files.createTempDirectory("snap-sinkm-ckpt").toString
     val chunks = eventLines.grouped(math.max(1, eventLines.size / 3 + 1)).toSeq
     (0 until 3).foreach(i => dropChunk(src, f"chunk_$i%02d.json", chunks(i)))
     val q = SnapshotSink.start(
-      LiveIngest.fromDirectory(spark, src, maxFilesPerTrigger = 1), table, ckpt,
-      carry = Snapshots.CarryManifest)
+      LiveIngest.fromDirectory(spark, src, maxFilesPerTrigger = 1), table, ckpt)
     try q.processAllAvailable() finally q.stop()
     val vLatest = Snapshots.latestVersion(table).get
     assert(vLatest == 3)
@@ -96,35 +95,34 @@ class SnapshotSinkSpec extends SparkSuite {
       assert(a.subsetOf(b), "a later version lost earlier rows")
     }
     assert(perVersion.last == eventsBatch.select("event_id").as[Long].collect().toSet)
-    // structural O(batch): version 3's own dir holds fewer data files
-    // than a materialized full table would (only its batch + markers)
-    val v3own = new java.io.File(table.stripPrefix("file:") + "/v=3").listFiles()
-      .count(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    val v1own = new java.io.File(table.stripPrefix("file:") + "/v=1").listFiles()
-      .count(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    assert(v3own <= v1own,
-      s"manifest sink must not re-materialize inherited files (v3=$v3own v1=$v1own)")
+    // structural O(batch): every data file on disk is one the latest
+    // version reads — no trigger re-materialized an inherited file
+    val written = new java.io.File(table.stripPrefix("file:")).listFiles()
+      .filter(_.getName.startsWith("d-"))
+      .map(_.listFiles().count(f => !f.getName.startsWith("_") && !f.getName.startsWith(".")))
+      .sum
+    val latestReads = Snapshots.read(spark, table).inputFiles.length
+    assert(written == latestReads,
+      s"sink must not re-materialize inherited files (on disk=$written, latest reads=$latestReads)")
     // restart with a redelivered batch id appends nothing
     val q2 = SnapshotSink.start(
-      LiveIngest.fromDirectory(spark, src, maxFilesPerTrigger = 1), table, ckpt,
-      carry = Snapshots.CarryManifest)
+      LiveIngest.fromDirectory(spark, src, maxFilesPerTrigger = 1), table, ckpt)
     try q2.processAllAvailable() finally q2.stop()
     assert(Snapshots.latestVersion(table).get == 3, "restart must re-commit nothing")
   }
 
   test("CAS sink on a conditional-PUT object store (mock3c): one conditional " +
       "PUT per trigger, same prefixes, restart without dupes") {
-    // the sink's store dispatch end to end: a declared conditional-PUT
-    // tableDir routes every micro-batch through CasSnapshots — one
-    // _log/N CAS per trigger, tags give the same exactly-once replay
-    // contract, and the pinned-reader prefixes hold mid-stream
+    // the sink end to end on a declared conditional-PUT store: every
+    // micro-batch commits as one _log/N CAS, tags give the same
+    // exactly-once replay contract, and the pinned-reader prefixes hold
+    // mid-stream
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.mock3c.impl", classOf[graft.sources.ConditionalPutMockFs].getName)
     graft.sources.ArtifactIo.addExtraScheme(hc,
       graft.sources.ArtifactIo.RenameByCopyExtraSchemesKey, "mock3c")
     graft.sources.ArtifactIo.addExtraScheme(hc,
       graft.sources.ArtifactIo.ConditionalPutExtraSchemesKey, "mock3c")
-    import graft.sources.CasSnapshots
     val src = Files.createTempDirectory("snap-sinkc-src").toString
     val table = "mock3c:" + Files.createTempDirectory("snap-sinkc-tbl").toString + "/t"
     val ckpt = Files.createTempDirectory("snap-sinkc-ckpt").toString
@@ -133,9 +131,9 @@ class SnapshotSinkSpec extends SparkSuite {
     val q = SnapshotSink.start(
       LiveIngest.fromDirectory(spark, src, maxFilesPerTrigger = 1), table, ckpt)
     try q.processAllAvailable() finally q.stop()
-    val vLatest = CasSnapshots.latestVersion(table).get
+    val vLatest = Snapshots.latestVersion(table).get
     assert(vLatest == 3, s"expected 3 CAS versions, latest=$vLatest")
-    def ids(v: Int): Set[Long] = CasSnapshots.read(spark, table, Some(v))
+    def ids(v: Int): Set[Long] = Snapshots.read(spark, table, Some(v))
       .select("event_id").as[Long].collect().toSet
     val perVersion = (1 to vLatest).map(ids)
     perVersion.sliding(2).foreach { case Seq(a, b) =>
@@ -154,9 +152,9 @@ class SnapshotSinkSpec extends SparkSuite {
     val q2 = SnapshotSink.start(
       LiveIngest.fromDirectory(spark, src, maxFilesPerTrigger = 1), table, ckpt)
     try q2.processAllAvailable() finally q2.stop()
-    assert(CasSnapshots.latestVersion(table).get == 4,
+    assert(Snapshots.latestVersion(table).get == 4,
       "restart must append exactly one version")
-    val finalIds = CasSnapshots.read(spark, table).select("event_id").as[Long].collect().toSeq
+    val finalIds = Snapshots.read(spark, table).select("event_id").as[Long].collect().toSeq
     assert(finalIds.length == finalIds.distinct.length, "restart re-applied a batch (dupes)")
     assert(finalIds.toSet == allIds ++ extraIds)
     assert(ids(1) == pinnedV1, "pinned version changed under a later commit")

@@ -45,7 +45,7 @@ class CompactSpec extends SparkSuite {
     import graft.sources.Snapshots
     val table = java.nio.file.Files.createTempDirectory("graft-compactnoop").toString + "/t"
     Snapshots.commit((0L until 100L).toDF("id").coalesce(1), table)
-    val (v1, n1) = Compact.compactVersion(spark, table, targetBytes = 64L << 20)
+    val (v1, n1) = Snapshots.compact(spark, table, targetBytes = 64L << 20)
     assert(v1 == 1 && n1 == 1) // already one file: no new version accreted
     assert(Snapshots.latestVersion(table).contains(1))
   }
@@ -55,7 +55,9 @@ class CompactSpec extends SparkSuite {
     val table = java.nio.file.Files.createTempDirectory("graft-compactv").toString + "/t"
     val expected = (0L until 5000L).map(i => (i, s"row$i")).toSet
     Snapshots.commit(expected.toSeq.toDF("id", "s").repartition(32), table)
-    val before = Compact.dataFileCount(s"$table/v=1")
+    // (file count, on-disk bytes) of v=1's data files
+    val v1Before = Snapshots.resolvedStats(table, 1)
+    val before = v1Before._1
     assert(before >= 16)
     // concurrent reader hammers the table while compaction runs: every
     // read must resolve a complete version — old or new, never missing
@@ -68,13 +70,13 @@ class CompactSpec extends SparkSuite {
     })
     reader.start()
     try {
-      val (newV, files) = Compact.compactVersion(spark, table, targetBytes = 64L << 20)
+      val (newV, files) = Snapshots.compact(spark, table, targetBytes = 64L << 20)
       assert(newV == 2 && files < before && files >= 1)
     } finally { stop = true; reader.join() }
     assert(readerFailure.isEmpty, s"reader failed during compaction: $readerFailure")
     // new version carries identical content; old version untouched for pins
     assert(Snapshots.read(spark, table).as[(Long, String)].collect().toSet == expected)
     assert(Snapshots.read(spark, table, Some(1)).as[(Long, String)].collect().toSet == expected)
-    assert(Compact.dataFileCount(s"$table/v=1") == before)
+    assert(Snapshots.resolvedStats(table, 1) == v1Before)
   }
 }

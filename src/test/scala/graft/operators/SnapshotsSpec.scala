@@ -26,18 +26,16 @@ class SnapshotsSpec extends SparkSuite {
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     val table = java.nio.file.Files.createTempDirectory("graft-snap-race").toString + "/t"
-    // 8 committers race; the lock-serialized pointer publish must leave
-    // _latest at the highest claimed version — the check-then-act race
-    // (an older committer overwriting a newer pointer) would land lower
+    // 8 committers race on the `_log/N` CAS: every slot has exactly one
+    // winner, so the latest version is the highest committed one — a
+    // lost update (two committers on one slot) would land lower
     val vs = Await.result(
       Future.sequence((1 to 8).map(i => Future {
         Snapshots.commit(Seq(i.toLong).toDF("id"), table)
       })), 2.minutes)
     assert(vs.sorted == (1 to 8), s"claimed versions: $vs")
     assert(Snapshots.latestVersion(table).contains(8))
-    // the lock file persists by design (a mutex inode, never deleted —
-    // delete-by-name reclaim is a TOCTOU); a fresh commit must still
-    // acquire it cleanly
+    // a fresh commit after the race takes the next slot cleanly
     assert(Snapshots.commit(Seq(0L).toDF("id"), table) == 9)
     assert(Snapshots.latestVersion(table).contains(9))
   }
@@ -48,11 +46,12 @@ class SnapshotsSpec extends SparkSuite {
     // base unmoved: CAS succeeds
     assert(Snapshots.commitIfLatest(Seq(2L).toDF("id"), table, expectedBase = 1).contains(2))
     assert(Snapshots.latestVersion(table).contains(2))
-    // base moved (now 2, expected 1): CAS refuses, pointer untouched,
-    // claimed directory discarded
+    // base moved (now 2, expected 1): CAS refuses, no version claimed,
+    // staged data discarded
     assert(Snapshots.commitIfLatest(Seq(99L).toDF("id"), table, expectedBase = 1).isEmpty)
     assert(Snapshots.latestVersion(table).contains(2))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(table, "v=3")))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(table, "_log", "3")))
+    assert(new java.io.File(table).list().count(_.startsWith("d-")) == 2)
     assert(Snapshots.read(spark, table).as[Long].collect().toSeq == Seq(2L))
   }
 
@@ -63,7 +62,7 @@ class SnapshotsSpec extends SparkSuite {
     val v2 = Snapshots.commitAppend(Seq((3L, "c")).toDF("id", "s"), table, Some("batch-1"))
     val v3 = Snapshots.commitAppend(Seq((4L, "d")).toDF("id", "s"), table, Some("batch-2"))
     assert((v1, v2, v3) == (1, 2, 3))
-    // each version is the FULL table as of its batch (carry-forward links)
+    // each version is the FULL table as of its batch (files carried by name)
     def ids(v: Int) = Snapshots.read(spark, table, Some(v))
       .select("id").as[Long].collect().toSet
     assert(ids(1) == Set(1L, 2L))
@@ -78,31 +77,11 @@ class SnapshotsSpec extends SparkSuite {
     assert(ids(3) == Set(1L, 2L, 3L, 4L))
     // a pinned mid-stream version is untouched by later appends
     assert(ids(1) == Set(1L, 2L))
-    // dropping an old version never corrupts newer ones (hard links keep
-    // shared bytes alive until the last name is gone)
-    assert(Snapshots.drop(table, 1))
+    // dropping an old version never corrupts newer ones (vacuum keeps
+    // every data dir a surviving record still names)
+    assert(Snapshots.retainLast(table, 2) == Seq(1))
+    Snapshots.vacuum(table, graceMs = 0L): Unit
     assert(ids(3) == Set(1L, 2L, 3L, 4L))
-  }
-
-  test("taggedVersionAbove: the in-lock re-verify reads only versions above the watermark") {
-    val table = java.nio.file.Files.createTempDirectory("graft-snap-floor").toString + "/t"
-    Snapshots.commitAppend(Seq((1L, "a")).toDF("id", "s"), table, Some("batch-0")) // v=1
-    Snapshots.commitAppend(Seq((2L, "b")).toDF("id", "s"), table, Some("batch-1")) // v=2
-    Snapshots.commitAppend(Seq((3L, "c")).toDF("id", "s"), table, Some("batch-2")) // v=3
-    // floor 0 = the public taggedVersion (full history)
-    assert(Snapshots.taggedVersion(table, "batch-1").contains(2))
-    assert(Snapshots.taggedVersionAbove(table, "batch-1", 0).contains(2))
-    // the bound: a tag AT or BELOW the floor is the pre-scan's job, not
-    // the lock-held re-verify's — only above-floor claims are read
-    assert(Snapshots.taggedVersionAbove(table, "batch-1", 2).isEmpty)
-    assert(Snapshots.taggedVersionAbove(table, "batch-2", 2).contains(3))
-    assert(Snapshots.taggedVersionAbove(table, "batch-2", 3).isEmpty)
-    // the correctness argument for the watermark: any commit racing past
-    // a pre-scan claims ABOVE the pointer value the pre-scan read, so a
-    // floor taken from latestVersion never hides a racer's fresh tag
-    val floorThen = Snapshots.latestVersion(table).getOrElse(0)
-    Snapshots.commitAppend(Seq((4L, "d")).toDF("id", "s"), table, Some("batch-3")) // racer
-    assert(Snapshots.taggedVersionAbove(table, "batch-3", floorThen).contains(4))
   }
 
   test("commitAppend retries across a concurrent commit instead of shadowing it") {
@@ -118,64 +97,10 @@ class SnapshotsSpec extends SparkSuite {
       Snapshots.commitAppend(Seq((i.toLong, s"r$i")).toDF("id", "s"), table,
         Some(s"app-$i"))
     })), 2.minutes)
-    // CAS-failed claims discard and re-claim HIGHER numbers, so the final
-    // version id may exceed 5 — the invariant is content, not numbering
+    // the invariant is content, not numbering: every append lands once
     assert(Snapshots.latestVersion(table).exists(_ >= 5))
     assert(Snapshots.read(spark, table).select("id").as[Long].collect().toSet ==
       (1L to 5L).toSet)
-  }
-
-  test("commitAppend rolls a crashed tagged commit forward instead of losing the batch") {
-    val table = java.nio.file.Files.createTempDirectory("graft-snap-roll").toString + "/t"
-    Snapshots.commitAppend(Seq((1L, "a")).toDF("id", "s"), table, Some("batch-0")) // v=1
-    // simulate a committer that died between the atomic v=2 rename and
-    // the pointer publish: a complete tagged+based version dir, with
-    // _latest still on v=1
-    Seq((1L, "a"), (2L, "b")).toDF("id", "s").write.parquet(s"$table/v=2")
-    java.nio.file.Files.write(java.nio.file.Paths.get(table, "v=2", "_graft_tag"),
-      "batch-1".getBytes("UTF-8"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(table, "v=2", "_graft_base"),
-      "1".getBytes("UTF-8"))
-    assert(Snapshots.latestVersion(table).contains(1))
-    // the streaming replay re-delivers batch-1: the orphan must be
-    // PUBLISHED (roll-forward), not silently returned unpublished — and
-    // the replayed rows must not commit twice (99 never appears)
-    val replay = Snapshots.commitAppend(Seq((99L, "dup")).toDF("id", "s"), table,
-      Some("batch-1"))
-    assert(replay == 2)
-    assert(Snapshots.latestVersion(table).contains(2))
-    assert(Snapshots.read(spark, table).select("id").as[Long].collect().toSet == Set(1L, 2L))
-    // a second replay is now a plain in-chain no-op
-    assert(Snapshots.commitAppend(Seq((98L, "x")).toDF("id", "s"), table, Some("batch-1")) == 2)
-    assert(Snapshots.read(spark, table).select("id").as[Long].collect().toSet == Set(1L, 2L))
-  }
-
-  test("commitAppend re-commits a replay whose orphan was raced past (stale carry-forward)") {
-    val table = java.nio.file.Files.createTempDirectory("graft-snap-stale").toString + "/t"
-    Snapshots.commitAppend(Seq((1L, "a")).toDF("id", "s"), table, Some("batch-0")) // v=1
-    // crashed batch-1 orphan at v=2 (carry-forward of v=1 + its row)
-    Seq((1L, "a"), (2L, "b")).toDF("id", "s").write.parquet(s"$table/v=2")
-    java.nio.file.Files.write(java.nio.file.Paths.get(table, "v=2", "_graft_tag"),
-      "batch-1".getBytes("UTF-8"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(table, "v=2", "_graft_base"),
-      "1".getBytes("UTF-8"))
-    // before recovery runs, ANOTHER writer appends: claims v=3 (numbering
-    // passes the orphan), carries from the published v=1, publishes
-    val v3 = Snapshots.commitAppend(Seq((30L, "c")).toDF("id", "s"), table, Some("other"))
-    assert(v3 == 3 && Snapshots.latestVersion(table).contains(3))
-    // batch-1's replay: the orphan's carry-forward is stale (misses 30) —
-    // publishing it would shadow the other writer. It must re-commit the
-    // batch fresh on the new base instead; exactly-once for BOTH batches.
-    val replay = Snapshots.commitAppend(Seq((2L, "b")).toDF("id", "s"), table, Some("batch-1"))
-    assert(replay == 4, s"expected fresh v=4, got $replay")
-    assert(Snapshots.read(spark, table).select("id").as[Long].collect().toSet ==
-      Set(1L, 2L, 30L))
-    // the stale orphan's data dir survives (pinned-reader safety) but its
-    // idempotence record is cleared — a THIRD replay lands on the fresh
-    // commit, not the orphan
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(table, "v=2")))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(table, "v=2", "_graft_tag")))
-    assert(Snapshots.commitAppend(Seq((2L, "b")).toDF("id", "s"), table, Some("batch-1")) == 4)
   }
 
   test("concurrent same-tag committers append exactly once (publish-lock tag re-check)") {
@@ -185,9 +110,8 @@ class SnapshotsSpec extends SparkSuite {
     val table = java.nio.file.Files.createTempDirectory("graft-snap-tagrace").toString + "/t"
     Snapshots.commitAppend(Seq(0L).toDF("id"), table, Some("batch-0")) // v=1
     // 6 committers race one batch id (a restarted streaming driver racing
-    // its zombie original): the pre-claim tag scan alone can interleave
-    // with another committer's publish so both pass the CAS — the
-    // under-lock tag re-check must collapse them to ONE committed version
+    // its zombie original): the pinned-base tag scan plus the slot CAS
+    // must collapse them to ONE committed version
     val vs = Await.result(
       Future.sequence((1 to 6).map(_ => Future {
         Snapshots.commitAppend(Seq(100L).toDF("id"), table, Some("batch-1"))
@@ -200,26 +124,6 @@ class SnapshotsSpec extends SparkSuite {
     assert(Snapshots.taggedVersion(table, "batch-1").contains(vs.head))
   }
 
-  test("taggedVersion: duplicate tags resolve to the chain member, else the smallest version") {
-    val table = java.nio.file.Files.createTempDirectory("graft-snap-tagdup").toString + "/t"
-    Snapshots.commitAppend(Seq(1L).toDF("id"), table, Some("b1")) // v=1, published
-    // plant the SAME tag on a higher orphan directory (the transient
-    // duplicate a crashed replay can leave): the published-chain member
-    // must win, never filesystem listing order
-    Seq(9L).toDF("id").write.parquet(s"$table/v=3")
-    java.nio.file.Files.write(java.nio.file.Paths.get(table, "v=3", "_graft_tag"),
-      "b1".getBytes("UTF-8"))
-    assert(Snapshots.taggedVersion(table, "b1").contains(1))
-    // a tag on two UNPUBLISHED orphans: deterministic smallest-version pick
-    Seq(8L).toDF("id").write.parquet(s"$table/v=6")
-    Seq(7L).toDF("id").write.parquet(s"$table/v=4")
-    java.nio.file.Files.write(java.nio.file.Paths.get(table, "v=6", "_graft_tag"),
-      "tx".getBytes("UTF-8"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(table, "v=4", "_graft_tag"),
-      "tx".getBytes("UTF-8"))
-    assert(Snapshots.taggedVersion(table, "tx").contains(4))
-  }
-
   test("rollbackTo restores old content as a NEW version; history stays immutable") {
     val table = java.nio.file.Files.createTempDirectory("graft-snaprb").toString + "/t"
     val v1 = Snapshots.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), table)
@@ -227,7 +131,7 @@ class SnapshotsSpec extends SparkSuite {
     val v3 = Snapshots.rollbackTo(table, v1)
     assert((v1, v2, v3) == (1, 2, 3))
     assert(Snapshots.latestVersion(table).contains(3))
-    // latest = v1's content, carried forward (no data rewrite)
+    // latest = v1's content, named by the rollback record (no data rewrite)
     assert(Snapshots.read(spark, table).as[(Long, String)].collect().toSet ==
       Set((1L, "a"), (2L, "b")))
     // the bad intermediate stays pinned-readable
@@ -245,56 +149,13 @@ class SnapshotsSpec extends SparkSuite {
       Set((1L, "a"), (2L, "b"), (5L, "e")))
   }
 
-  test("stale above-latest orphan: tag neutralized atomically, replay stays exactly-once") {
-    import java.nio.charset.StandardCharsets
-    import java.nio.file.{Files, Paths}
-    val table = java.nio.file.Files.createTempDirectory("graft-snap-orph").toString + "/t"
-    Snapshots.commit(Seq(1L).toDF("id"), table)  // v1
-    Snapshots.commit(Seq(2L).toDF("id"), table)  // v2 published, latest=2
-    // simulate a committer that claimed v=3 against base 1 and crashed
-    // before its pointer publish, while v2 raced past it: a STALE orphan
-    // whose carry-forward is outdated
-    Seq(99L).toDF("id").write.parquet(s"$table/v=3")
-    Files.write(Paths.get(table, "v=3", "_graft_tag"), "batch-b".getBytes(StandardCharsets.UTF_8))
-    Files.write(Paths.get(table, "v=3", "_graft_base"), "1".getBytes(StandardCharsets.UTF_8))
-    // the replayed batch must re-commit FRESH against the new base and
-    // neutralize the orphan's tag in the same classification — leaving
-    // it would put one tag on two versions
-    val v = Snapshots.commitAppend(Seq(5L).toDF("id"), table, tag = Some("batch-b"))
-    assert(v == 4 && Snapshots.latestVersion(table).contains(4))
-    assert(!Files.exists(Paths.get(table, "v=3", "_graft_tag")))
-    assert(Snapshots.read(spark, table).as[Long].collect().toSet == Set(2L, 5L))
-    // a SECOND re-delivery is a pure no-op: without the neutralization it
-    // could scan onto the stale orphan's tag and append the batch AGAIN
-    assert(Snapshots.commitAppend(Seq(5L).toDF("id"), table, tag = Some("batch-b")) == 4)
-    assert(Snapshots.latestVersion(table).contains(4))
-    assert(Snapshots.read(spark, table).as[Long].collect().toSet == Set(2L, 5L))
-  }
-
-  test("rollbackTo refuses a crashed commit's unpublished orphan directory") {
-    val table = java.nio.file.Files.createTempDirectory("graft-snap-orb").toString + "/t"
-    Snapshots.commit(Seq(1L).toDF("id"), table)     // v1 published
-    Seq(99L).toDF("id").write.parquet(s"$table/v=2") // orphan: claimed, never published
-    Snapshots.commit(Seq(3L).toDF("id"), table)     // claims past the orphan → v3, latest
-    assert(Snapshots.latestVersion(table).contains(3))
-    // v=2's directory exists and 2 < latest, but its content was never
-    // any published table state — restoring it would resurrect data no
-    // reader ever saw
-    val e = intercept[IllegalArgumentException](Snapshots.rollbackTo(table, 2))
-    assert(e.getMessage.contains("never published"))
-    // a genuinely published old version still restores
-    assert(Snapshots.rollbackTo(table, 1) == 4)
-    assert(Snapshots.read(spark, table).as[Long].collect().toSeq == Seq(1L))
-  }
-
   test("readChanges: additions-only feed walks appends and dataChange=false rewrites") {
-    import graft.sources.Compact
     val table = java.nio.file.Files.createTempDirectory("graft-snap-cdc").toString + "/t"
     val v1 = Snapshots.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), table)
     Snapshots.commitAppend(Seq((3L, "c")).toDF("id", "s"), table)
     // content-preserving compaction between the appends: the feed must
     // walk THROUGH it with an empty delta, not replay the whole table
-    val (vc, _) = Compact.compactVersion(spark, table, targetBytes = 1L << 30)
+    val (vc, _) = Snapshots.compact(spark, table, targetBytes = 1L << 30)
     assert(vc == 3)
     Snapshots.commitAppend(Seq((4L, "d")).toDF("id", "s"), table)
     assert(Snapshots.readChanges(spark, table, v1).as[(Long, String)].collect().toSet ==
@@ -318,24 +179,15 @@ class SnapshotsSpec extends SparkSuite {
     intercept[IllegalStateException](Snapshots.readChanges(spark, t2, w1))
   }
 
-  test("drop refuses the latest version, removes pinned history on request") {
-    val table = java.nio.file.Files.createTempDirectory("graft-snap2").toString + "/t"
-    Snapshots.commit(Seq(1L).toDF("id"), table)
-    Snapshots.commit(Seq(2L).toDF("id"), table)
-    intercept[IllegalArgumentException](Snapshots.drop(table, 2))
-    assert(Snapshots.drop(table, 1))
-    assert(!Snapshots.drop(table, 1)) // already gone
-    assert(Snapshots.read(spark, table).as[Long].collect().toSeq == Seq(2L))
-  }
-
   test("retainLast keeps the newest k; shared link bytes survive; crossed feeds fail loudly") {
     val table = java.nio.file.Files.createTempDirectory("graft-snap-ret").toString + "/t"
     Snapshots.commit(Seq(1L).toDF("id"), table)
     (2 to 5).foreach(i => Snapshots.commitAppend(Seq(i.toLong).toDF("id"), table))
     assert(Snapshots.retainLast(table, 2) == Seq(1, 2, 3))
     assert(Snapshots.retainLast(table, 2).isEmpty) // idempotent
-    // the kept versions still read in full: carried hard links keep
-    // shared bytes alive after their origin version was dropped
+    // the kept versions still read in full: vacuum keeps the bytes a
+    // surviving record carries after their origin version was dropped
+    Snapshots.vacuum(table, graceMs = 0L): Unit
     assert(Snapshots.read(spark, table, Some(4)).as[Long].collect().toSet ==
       (1L to 4L).toSet)
     assert(Snapshots.read(spark, table).as[Long].collect().toSet == (1L to 5L).toSet)
@@ -346,71 +198,11 @@ class SnapshotsSpec extends SparkSuite {
     intercept[IllegalArgumentException](Snapshots.retainLast(table, 0))
   }
 
-  test("manifest carry: O(batch) appends read identically to Links appends at every version") {
-    import graft.sources.Snapshots.CarryManifest
-    val linksT = java.nio.file.Files.createTempDirectory("graft-snap-ml").toString + "/t"
-    val manT = java.nio.file.Files.createTempDirectory("graft-snap-mm").toString + "/t"
-    def rows(t: String, v: Int) =
-      Snapshots.read(spark, t, Some(v)).as[(Long, String)].collect().toSet
-    for (t <- Seq(linksT, manT)) Snapshots.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), t)
-    Snapshots.commitAppend(Seq((3L, "c")).toDF("id", "s"), linksT)
-    Snapshots.commitAppend(Seq((3L, "c")).toDF("id", "s"), manT, carry = CarryManifest)
-    Snapshots.commitAppend(Seq((4L, "d")).toDF("id", "s"), linksT)
-    Snapshots.commitAppend(Seq((4L, "d")).toDF("id", "s"), manT, carry = CarryManifest)
-    (1 to 3).foreach(v => assert(rows(manT, v) == rows(linksT, v), s"v=$v diverged"))
-    // the manifest version's own directory holds ONLY its batch (plus
-    // markers) — the O(batch) claim, checked structurally
-    def ownDataFiles(t: String, v: Int) =
-      new java.io.File(s"$t/v=$v").listFiles()
-        .count(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    assert(ownDataFiles(manT, 3) < ownDataFiles(linksT, 3),
-      "manifest append must not materialize inherited files")
-    // CDF walks manifest appends exactly like Links appends
-    assert(Snapshots.readChanges(spark, manT, 1).as[(Long, String)].collect().toSet ==
-      Set((3L, "c"), (4L, "d")))
-    // a Links append ON TOP of a manifest base re-materializes the
-    // RESOLVED set (modes mix freely)
-    Snapshots.commitAppend(Seq((5L, "e")).toDF("id", "s"), manT)
-    assert(rows(manT, 4) == Set((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"), (5L, "e")))
-    // rollback to a manifest version materializes (the restored version
-    // is independently retainable)
-    val vr = Snapshots.rollbackTo(manT, 3)
-    assert(rows(manT, vr) == Set((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
-  }
-
-  test("manifest carry retention: referenced versions refuse drop until compaction re-bases") {
-    import graft.sources.{Compact, Snapshots}
-    import graft.sources.Snapshots.CarryManifest
-    val t = java.nio.file.Files.createTempDirectory("graft-snap-mr").toString + "/t"
-    Snapshots.commit(Seq((1L, "a")).toDF("id", "s"), t)
-    Snapshots.commitAppend(Seq((2L, "b")).toDF("id", "s"), t, carry = CarryManifest)
-    Snapshots.commitAppend(Seq((3L, "c")).toDF("id", "s"), t, carry = CarryManifest)
-    // v1's files are carried by v2 (and v3) — dropping it would break them
-    val ex = intercept[IllegalArgumentException](Snapshots.drop(t, 1))
-    assert(ex.getMessage.contains("carried by"), ex.getMessage)
-    // retainLast skips referenced versions instead of failing the sweep
-    assert(Snapshots.retainLast(t, 1).isEmpty)
-    // compaction sees the RESOLVED set (3 rows), rewrites self-contained,
-    // and re-bases the chain even though the file count is already small
-    val (vc, _) = Compact.compactVersion(spark, t, targetBytes = 1L << 30)
-    assert(vc == 4)
-    assert(Snapshots.read(spark, t).as[(Long, String)].collect().toSet ==
-      Set((1L, "a"), (2L, "b"), (3L, "c")))
-    // the feed walks the compaction's empty delta without re-baselining
-    assert(Snapshots.readChanges(spark, t, 1).as[(Long, String)].collect().toSet ==
-      Set((2L, "b"), (3L, "c")))
-    // now retention reclaims the whole referenced chain (descending
-    // sweep: v3 releases v2 releases v1), and the survivor still reads
-    assert(Snapshots.retainLast(t, 1) == Seq(1, 2, 3))
-    assert(Snapshots.read(spark, t).as[(Long, String)].collect().toSet ==
-      Set((1L, "a"), (2L, "b"), (3L, "c")))
-  }
-
   test("file:-scheme'd table runs the whole snapshot lifecycle through the Hadoop-backed io") {
-    // the r17 store contract: commit, tagged append + exactly-once
-    // replay, rollback, CDF, retention — all primitives (claim rename,
-    // pointer-lock publish, carry-forward by copy, manifests) on the
-    // Hadoop io instead of java.nio, exercised via the file: scheme
+    // the store contract: commit, tagged append + exactly-once replay,
+    // rollback, CDF, retention — every primitive (staging, the `_log/N`
+    // conditional PUT, record reads, vacuum) on the Hadoop io instead of
+    // java.nio, exercised via the file: scheme
     val table = "file:" +
       java.nio.file.Files.createTempDirectory("graft-snap-fs").toString + "/t"
     val v1 = Snapshots.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), table)
@@ -427,17 +219,82 @@ class SnapshotsSpec extends SparkSuite {
       Set((1L, "a"), (2L, "b")))
     assert(Snapshots.readChanges(spark, table, v1).as[(Long, String)].collect().toSet ==
       Set((3L, "c")))
-    // rollback publishes a NEW carried-forward version; v2 stays pinned
+    // rollback publishes a NEW version naming v1's files; v2 stays pinned
     val v3 = Snapshots.rollbackTo(table, v1)
     assert(v3 == 3)
     assert(Snapshots.read(spark, table).as[(Long, String)].collect().toSet ==
       Set((1L, "a"), (2L, "b")))
     assert(Snapshots.read(spark, table, Some(v2)).as[(Long, String)].collect().toSet ==
       Set((1L, "a"), (2L, "b"), (3L, "c")))
-    // retention through the scheme'd io; the dropped version's feed
-    // fails loudly, the survivors read in full
-    assert(Snapshots.drop(table, v1))
+    // retention through the scheme'd io; the survivors read in full
+    assert(Snapshots.retainLast(table, 2) == Seq(v1))
+    Snapshots.vacuum(table, graceMs = 0L): Unit
     assert(Snapshots.read(spark, table, Some(v2)).as[(Long, String)].collect().toSet ==
       Set((1L, "a"), (2L, "b"), (3L, "c")))
+    // the rollback record still names v1's files after v1's record went
+    assert(Snapshots.read(spark, table).as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (2L, "b")))
+  }
+
+  test("crash between staging and the _log/N PUT: reads see the previous version, " +
+      "the replay commits once, vacuum reclaims the orphan stage") {
+    val table = java.nio.file.Files.createTempDirectory("graft-snap-crash").toString + "/t"
+    def dataDirs = new java.io.File(table).list().filter(_.startsWith("d-")).toSet
+    def rows = Snapshots.read(spark, table).as[(Long, String)].collect().toSeq.sorted
+    Snapshots.commitAppend(Seq((1L, "a")).toDF("id", "s"), table, Some("batch-0")) // v=1
+    val committedDirs = dataDirs
+    val batch = Seq((2L, "b")).toDF("id", "s")
+    // the seam runs after the batch is staged and before its CAS: a
+    // throw there is a committer dying at the protocol's one crash point
+    val crash = intercept[IllegalStateException](
+      Snapshots.commitAppendHooked(batch, table, Some("batch-1"),
+        () => throw new IllegalStateException("committer crashed before its CAS")))
+    assert(crash.getMessage.contains("crashed"))
+    val orphans = dataDirs -- committedDirs
+    assert(orphans.size == 1, s"expected one orphan stage, got $orphans")
+    // no record names the orphan: every read still sees v=1
+    assert(Snapshots.latestVersion(table).contains(1))
+    assert(rows == Seq((1L, "a")))
+    assert(Snapshots.taggedVersion(table, "batch-1").isEmpty)
+    // the redelivered batch commits exactly once; a second replay is a no-op
+    assert(Snapshots.commitAppend(batch, table, Some("batch-1")) == 2)
+    assert(Snapshots.commitAppend(batch, table, Some("batch-1")) == 2)
+    assert(Snapshots.latestVersion(table).contains(2))
+    assert(rows == Seq((1L, "a"), (2L, "b")))
+    // the orphan survives the grace window (it could be an in-flight
+    // stage) and is reclaimed at grace 0 — nothing a record names goes
+    assert(Snapshots.vacuum(table).isEmpty)
+    assert(Snapshots.vacuum(table, graceMs = 0L).toSet == orphans)
+    assert(rows == Seq((1L, "a"), (2L, "b")))
+  }
+
+  test("a legacy rename-protocol table (_latest over v=N, no log) is refused by name " +
+      "at every entry point") {
+    val table = java.nio.file.Files.createTempDirectory("graft-snap-legacy").toString + "/t"
+    Seq(1L).toDF("id").write.parquet(s"$table/v=1")
+    java.nio.file.Files.write(java.nio.file.Paths.get(table, "_latest"), "1".getBytes("UTF-8"))
+    val layout = new java.io.File(table).list().toSet
+    val df = Seq(2L).toDF("id")
+    val calls: Seq[(String, () => Any)] = Seq(
+      "latestVersion" -> (() => Snapshots.latestVersion(table)),
+      "read" -> (() => Snapshots.read(spark, table)),
+      "read pinned" -> (() => Snapshots.read(spark, table, Some(1))),
+      "readChanges" -> (() => Snapshots.readChanges(spark, table, 1)),
+      "commit" -> (() => Snapshots.commit(df, table)),
+      "commitAppend" -> (() => Snapshots.commitAppend(df, table)),
+      "tagged commitAppend" -> (() => Snapshots.commitAppend(df, table, Some("b-1"))),
+      "commitIfLatest" -> (() => Snapshots.commitIfLatest(df, table, expectedBase = 1)),
+      "rollbackTo" -> (() => Snapshots.rollbackTo(table, 1)),
+      "taggedVersion" -> (() => Snapshots.taggedVersion(table, "b-1")),
+      "compact" -> (() => Snapshots.compact(spark, table, 1L << 20)),
+      "retainLast" -> (() => Snapshots.retainLast(table, 1)),
+      "vacuum" -> (() => Snapshots.vacuum(table, graceMs = 0L)))
+    calls.foreach { case (name, call) =>
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains(table) && e.getMessage.contains("legacy"),
+        s"$name: ${e.getMessage}")
+    }
+    // refused before anything was written into the old layout
+    assert(new java.io.File(table).list().toSet == layout)
   }
 }

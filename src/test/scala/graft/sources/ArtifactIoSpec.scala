@@ -130,7 +130,6 @@ class ArtifactIoSpec extends SparkSuite {
     // UNAVAILABLE, loudly — protocols on this store class must be
     // written without them
     intercept[UnsupportedOperationException](io.rename(dir, root + "/x"))
-    intercept[UnsupportedOperationException](io.renameReplace(dir + "/a", dir + "/b"))
     intercept[UnsupportedOperationException](io.tryRenameNoReplace(dir + "/a", dir + "/b"))
     intercept[UnsupportedOperationException](
       io.withLock(dir + "/.lock", 1L, "spec", "hint") { 1 })

@@ -2,14 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{ArtifactIo, CasSnapshots, ConditionalPutMockFs}
+import graft.sources.{ArtifactIo, ConditionalPutMockFs, Snapshots}
 
-/** CasSnapshots: the log-is-the-pointer snapshot protocol for
-  * conditional-PUT object stores (rename = copy+delete, no locks, but
-  * `create(overwrite = false)` is an atomic If-None-Match PUT). Driven
-  * against `mock3c:` ([[ConditionalPutMockFs]]) — the honesty tests pin
-  * that the mock really lacks what the store class lacks and really has
-  * the one primitive the protocol uses.
+/** Snapshots' log-is-the-pointer protocol on conditional-PUT object
+  * stores (rename = copy+delete, no locks, but `create(overwrite =
+  * false)` is an atomic If-None-Match PUT). Driven against `mock3c:`
+  * ([[ConditionalPutMockFs]]) — the honesty tests pin that the mock
+  * really lacks what the store class lacks and really has the one
+  * primitive the protocol uses.
   */
 class CasSnapshotsSpec extends SparkSuite {
 
@@ -32,7 +32,7 @@ class CasSnapshotsSpec extends SparkSuite {
   }
 
   private def rows(tableDir: String, version: Option[Int] = None): Seq[String] =
-    CasSnapshots.read(spark, tableDir, version)
+    Snapshots.read(spark, tableDir, version)
       .collect().map(_.toString).sorted.toSeq
 
   test("forSnapshotPath admission: conditional-PUT stores in, classic object " +
@@ -117,28 +117,28 @@ class CasSnapshotsSpec extends SparkSuite {
     val base = (1L to 40L).map(i => (i, s"doc-$i")).toDF("id", "text")
     val b1 = (101L to 110L).map(i => (i, s"b1-$i")).toDF("id", "text")
     val b2 = (201L to 205L).map(i => (i, s"b2-$i")).toDF("id", "text")
-    val v1 = CasSnapshots.commit(base, table)
+    val v1 = Snapshots.commit(base, table)
     assert(v1 == 1)
-    val v2 = CasSnapshots.commitAppend(b1, table, tag = Some("batch-1"))
+    val v2 = Snapshots.commitAppend(b1, table, tag = Some("batch-1"))
     assert(v2 == 2)
     // replay: same tag returns the committed version, writes nothing
     val filesBefore = ArtifactIo.forSnapshotPath(table).listNames(table).toSet
-    assert(CasSnapshots.commitAppend(b1, table, tag = Some("batch-1")) == 2)
+    assert(Snapshots.commitAppend(b1, table, tag = Some("batch-1")) == 2)
     assert(ArtifactIo.forSnapshotPath(table).listNames(table).toSet == filesBefore,
       "a replayed batch must not stage or commit anything")
     // CAS-guarded maintenance rewrite (compaction shape): stale base loses
-    assert(CasSnapshots.commitIfLatest(CasSnapshots.read(spark, table), table,
+    assert(Snapshots.commitIfLatest(Snapshots.read(spark, table), table,
       expectedBase = v1, dataChange = false).isEmpty)
     // an ABOVE-latest expectedBase fails closed (the CAS alone would
     // fail open — the future slot is free — and punch a hole in the log)
     val exAbove = intercept[IllegalArgumentException](
-      CasSnapshots.commitIfLatest(CasSnapshots.read(spark, table), table,
+      Snapshots.commitIfLatest(Snapshots.read(spark, table), table,
         expectedBase = 99, dataChange = false))
     assert(exAbove.getMessage.contains("above the latest"), exAbove.getMessage)
-    val vc = CasSnapshots.commitIfLatest(CasSnapshots.read(spark, table), table,
+    val vc = Snapshots.commitIfLatest(Snapshots.read(spark, table), table,
       expectedBase = v2, dataChange = false).get
     assert(vc == 3)
-    val v4 = CasSnapshots.commitAppend(b2, table, tag = Some("batch-2"))
+    val v4 = Snapshots.commitAppend(b2, table, tag = Some("batch-2"))
     assert(v4 == 4)
     // pinned reads: v1 = base; v2 = base+b1; latest (v4) = base+b1+b2;
     // the maintenance version holds the same rows as its base
@@ -150,24 +150,24 @@ class CasSnapshotsSpec extends SparkSuite {
     assert(rows(table, Some(3)) == rows(table, Some(2)))
     assert(rows(table) == (baseRows ++ b1Rows ++ b2Rows).sorted)
     // CDF: since v1 = b1+b2 (maintenance contributes nothing); since vc = b2
-    assert(CasSnapshots.readChanges(spark, table, 1)
+    assert(Snapshots.readChanges(spark, table, 1)
       .collect().map(_.toString).sorted.toSeq == (b1Rows ++ b2Rows).sorted)
-    assert(CasSnapshots.readChanges(spark, table, vc)
+    assert(Snapshots.readChanges(spark, table, vc)
       .collect().map(_.toString).sorted.toSeq == b2Rows)
     // a replace inside the interval breaks the additions feed loudly
-    val v5 = CasSnapshots.commit(base, table)
+    val v5 = Snapshots.commit(base, table)
     val ex = intercept[IllegalStateException](
-      CasSnapshots.readChanges(spark, table, 1, Some(v5)))
+      Snapshots.readChanges(spark, table, 1, Some(v5)))
     assert(ex.getMessage.contains("replace"), ex.getMessage)
     // ...and a tag committed before the replace legitimately re-appends
-    assert(CasSnapshots.commitAppend(b1, table, tag = Some("batch-1")) == 6)
+    assert(Snapshots.commitAppend(b1, table, tag = Some("batch-1")) == 6)
   }
 
   test("4 racing committers: every CAS slot has exactly one winner, all four " +
       "batches land exactly once, the log is linear") {
     val table = mock3cDir("cas-race") + "/t"
     import spark.implicits._
-    CasSnapshots.commit((1L to 20L).map(i => (i, "base")).toDF("id", "src"), table): Unit
+    Snapshots.commit((1L to 20L).map(i => (i, "base")).toDF("id", "src"), table): Unit
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -176,20 +176,20 @@ class CasSnapshotsSpec extends SparkSuite {
         val s = spark.newSession()
         import s.implicits._
         val batch = (1L to 10L).map(i => (1000L * k + i, s"racer-$k")).toDF("id", "src")
-        CasSnapshots.commitAppend(batch, table, tag = Some(s"racer-$k"))
+        Snapshots.commitAppend(batch, table, tag = Some(s"racer-$k"))
       }
     })
     val versions = Await.result(racers, 120.seconds)
     assert(versions.sorted == Seq(2, 3, 4, 5),
       s"CAS slots must serialize the four commits, got $versions")
     // every batch exactly once, base exactly once
-    val all = CasSnapshots.read(spark, table).groupBy(col("src"))
+    val all = Snapshots.read(spark, table).groupBy(col("src"))
       .agg(count(lit(1)).as("n")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(all == Map("base" -> 20L, "racer-1" -> 10L, "racer-2" -> 10L,
       "racer-3" -> 10L, "racer-4" -> 10L), all.toString)
     // the chain is contiguous: each version's feed since v1 accumulates
-    assert(CasSnapshots.readChanges(spark, table, 1).count() == 40L)
+    assert(Snapshots.readChanges(spark, table, 1).count() == 40L)
   }
 
   test("DETERMINISTIC scan-vs-commit interleave: a peer winning the slot " +
@@ -203,20 +203,20 @@ class CasSnapshotsSpec extends SparkSuite {
     // version, once as own files.)
     val table = mock3cDir("cas-interleave") + "/t"
     import spark.implicits._
-    CasSnapshots.commit((1L to 20L).map(i => (i, "base")).toDF("id", "src"), table): Unit
+    Snapshots.commit((1L to 20L).map(i => (i, "base")).toDF("id", "src"), table): Unit
     def batch = (1L to 10L).map(i => (5000L + i, "dup")).toDF("id", "src")
     var fired = false
-    val v = CasSnapshots.commitAppendHooked(batch, table, Some("the-batch"), () => {
+    val v = Snapshots.commitAppendHooked(batch, table, Some("the-batch"), () => {
       if (!fired) { // first iteration only — the peer redelivery
         fired = true
-        CasSnapshots.commitAppend(batch, table, Some("the-batch")): Unit
+        Snapshots.commitAppend(batch, table, Some("the-batch")): Unit
       }
     })
     assert(fired, "the interleave hook must have run")
     assert(v == 2, s"the committer must adopt the peer's version, got $v")
-    assert(CasSnapshots.latestVersion(table).contains(2),
+    assert(Snapshots.latestVersion(table).contains(2),
       "no second version may exist — the loser must stand down, not take the next slot")
-    val n = CasSnapshots.read(spark, table).filter(col("src") === "dup").count()
+    val n = Snapshots.read(spark, table).filter(col("src") === "dup").count()
     assert(n == 10L, s"batch landed $n rows, want exactly 10 (no duplication)")
   }
 
@@ -224,7 +224,7 @@ class CasSnapshotsSpec extends SparkSuite {
       "exactly-once under concurrent redelivery") {
     val table = mock3cDir("cas-replay") + "/t"
     import spark.implicits._
-    CasSnapshots.commit((1L to 20L).map(i => (i, "base")).toDF("id", "src"), table): Unit
+    Snapshots.commit((1L to 20L).map(i => (i, "base")).toDF("id", "src"), table): Unit
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -233,15 +233,15 @@ class CasSnapshotsSpec extends SparkSuite {
         val s = spark.newSession()
         import s.implicits._
         val batch = (1L to 10L).map(i => (9000L + i, "dup")).toDF("id", "src")
-        CasSnapshots.commitAppend(batch, table, tag = Some("the-batch"))
+        Snapshots.commitAppend(batch, table, tag = Some("the-batch"))
       }
     })
     val versions = Await.result(racers, 120.seconds).toSet
     assert(versions.size == 1, s"all replays must converge on one version, got $versions")
-    val n = CasSnapshots.read(spark, table)
+    val n = Snapshots.read(spark, table)
       .filter(col("src") === "dup").count()
     assert(n == 10L, s"redelivered batch landed $n rows, want exactly 10")
-    assert(CasSnapshots.latestVersion(table).contains(versions.head))
+    assert(Snapshots.latestVersion(table).contains(versions.head))
   }
 
   test("rollbackTo: pure-metadata restore (one CAS, zero data movement), " +
@@ -250,11 +250,11 @@ class CasSnapshotsSpec extends SparkSuite {
     import spark.implicits._
     val base = (1L to 30L).map(i => (i, "base")).toDF("id", "src")
     val bad = (1L to 5L).map(i => (i, "bad")).toDF("id", "src")
-    val v1 = CasSnapshots.commit(base, table)
-    val v2 = CasSnapshots.commitAppend(bad, table, tag = Some("bad-batch"))
+    val v1 = Snapshots.commit(base, table)
+    val v2 = Snapshots.commitAppend(bad, table, tag = Some("bad-batch"))
     val dirsBefore = ArtifactIo.forSnapshotPath(table).listNames(table)
       .count(_.startsWith("d-"))
-    val v3 = CasSnapshots.rollbackTo(table, v1)
+    val v3 = Snapshots.rollbackTo(table, v1)
     assert(v3 == 3)
     // zero data movement: no new data dir was created by the restore
     assert(ArtifactIo.forSnapshotPath(table).listNames(table)
@@ -263,16 +263,16 @@ class CasSnapshotsSpec extends SparkSuite {
     assert(rows(table) == base.collect().map(_.toString).sorted.toSeq)
     assert(rows(table, Some(v2)).length == 35)
     // already-latest is a no-op
-    assert(CasSnapshots.rollbackTo(table, v3) == v3)
+    assert(Snapshots.rollbackTo(table, v3) == v3)
     // the pre-rollback tag still resolves on replay (chain walk
     // continues through the rollback record — no duplicate append)
-    assert(CasSnapshots.commitAppend(bad, table, tag = Some("bad-batch")) == v2)
+    assert(Snapshots.commitAppend(bad, table, tag = Some("bad-batch")) == v2)
     // the feed across the rollback is not expressible as additions
-    val v4 = CasSnapshots.commitAppend(
+    val v4 = Snapshots.commitAppend(
       (101L to 103L).map(i => (i, "after")).toDF("id", "src"), table)
-    assert(CasSnapshots.readChanges(spark, table, v3).count() == 3)
+    assert(Snapshots.readChanges(spark, table, v3).count() == 3)
     val ex = intercept[IllegalStateException](
-      CasSnapshots.readChanges(spark, table, v1, Some(v4)))
+      Snapshots.readChanges(spark, table, v1, Some(v4)))
     assert(ex.getMessage.contains("rollback"), ex.getMessage)
   }
 
@@ -280,27 +280,27 @@ class CasSnapshotsSpec extends SparkSuite {
       "record, feed walks through, predecessors reclaimable") {
     val table = mock3cDir("cas-compact") + "/t"
     import spark.implicits._
-    val v1 = CasSnapshots.commit(
+    val v1 = Snapshots.commit(
       (1L to 30L).map(i => (i, "base")).toDF("id", "src"), table)
     (1 to 3).foreach { k =>
-      CasSnapshots.commitAppend(
+      Snapshots.commitAppend(
         (1L to 5L).map(i => (100L * k + i, s"b$k")).toDF("id", "src"), table): Unit
     }
     val before = rows(table)
-    assert(CasSnapshots.carriedFileCount(table, 4) > 0, "appends must carry by name")
-    val (vc, files) = CasSnapshots.compact(spark, table, targetBytes = 1L << 30)
+    assert(Snapshots.carriedFileCount(table, 4) > 0, "appends must carry by name")
+    val (vc, files) = Snapshots.compact(spark, table, targetBytes = 1L << 30)
     assert(vc == 5 && files >= 1)
-    assert(CasSnapshots.carriedFileCount(table, vc) == 0, "compaction must re-base self-contained")
+    assert(Snapshots.carriedFileCount(table, vc) == 0, "compaction must re-base self-contained")
     assert(rows(table) == before, "compaction changed table content")
     // the feed from v1 walks THROUGH the maintenance version: still the
     // three appended batches, nothing doubled
-    assert(CasSnapshots.readChanges(spark, table, v1).count() == 15L)
+    assert(Snapshots.readChanges(spark, table, v1).count() == 15L)
     // a second scheduled compaction on the already-compact table is a no-op
-    assert(CasSnapshots.compact(spark, table, targetBytes = 1L << 30) == ((vc, files)))
+    assert(Snapshots.compact(spark, table, targetBytes = 1L << 30) == ((vc, files)))
     // post-compaction: retention + vacuum reclaim everything below the
     // re-base EXCEPT nothing — the compacted version owns its bytes
-    CasSnapshots.retainLast(table, keep = 1): Unit
-    val swept = CasSnapshots.vacuum(table, graceMs = 0L)
+    Snapshots.retainLast(table, keep = 1): Unit
+    val swept = Snapshots.vacuum(table, graceMs = 0L)
     assert(swept.length == 4, s"all four pre-compact dirs reclaim, got $swept")
     assert(rows(table) == before)
   }
@@ -310,9 +310,9 @@ class CasSnapshotsSpec extends SparkSuite {
     val table = mock3cDir("cas-vac") + "/t"
     import spark.implicits._
     val io = ArtifactIo.forSnapshotPath(table)
-    CasSnapshots.commit((1L to 30L).map(i => (i, "base")).toDF("id", "src"), table): Unit
+    Snapshots.commit((1L to 30L).map(i => (i, "base")).toDF("id", "src"), table): Unit
     (1 to 3).foreach { k =>
-      CasSnapshots.commitAppend(
+      Snapshots.commitAppend(
         (1L to 5L).map(i => (100L * k + i, s"b$k")).toDF("id", "src"), table): Unit
     }
     // a crashed committer's orphan stage: a data dir no record references
@@ -321,20 +321,20 @@ class CasSnapshotsSpec extends SparkSuite {
       "junk".getBytes("UTF-8"))
     // fresh orphan survives the grace window — an in-flight commit's
     // stage must never be swept from under it
-    assert(CasSnapshots.vacuum(table).isEmpty)
+    assert(Snapshots.vacuum(table).isEmpty)
     val latestRows = rows(table)
-    assert(CasSnapshots.retainLast(table, keep = 2) == Seq(1, 2))
+    assert(Snapshots.retainLast(table, keep = 2) == Seq(1, 2))
     // grace=0: the orphan goes; v1/v2's dirs STAY — v3/v4's carry lists
     // still reference their files (append-only chains share bytes)
-    val swept = CasSnapshots.vacuum(table, graceMs = 0L)
+    val swept = Snapshots.vacuum(table, graceMs = 0L)
     assert(swept == Seq("d-orphan-crashed"), swept.toString)
     assert(rows(table) == latestRows, "retention must not disturb surviving reads")
     assert(rows(table, Some(3)).nonEmpty)
     // the feed across the dropped floor fails loudly, never silently
-    val ex = intercept[Exception](CasSnapshots.readChanges(spark, table, 1))
+    val ex = intercept[Exception](Snapshots.readChanges(spark, table, 1))
     assert(ex.getMessage.contains("retention") || ex.getMessage.contains("committed"),
       ex.getMessage)
     // a dropped version's pinned read fails loudly too
-    intercept[IllegalArgumentException](CasSnapshots.read(spark, table, Some(1)))
+    intercept[IllegalArgumentException](Snapshots.read(spark, table, Some(1)))
   }
 }
