@@ -5,7 +5,6 @@ package graft
   * loop the build brief mandates (check pushdown, broadcast choices,
   * WholeStageCodegen spans). Usage:
   * `runMain graft.Explain [sfDir] [queryName...]`
-  * (`graft.examples.PlanDump` is a thin alias for scripts that used it.)
   */
 object Explain {
   def main(args: Array[String]): Unit = {

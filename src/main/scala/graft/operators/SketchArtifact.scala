@@ -69,34 +69,6 @@ private[graft] object SketchArtifact {
     rows.write.mode("append").parquet(path)
   }
 
-  /** Merge fragment rows back to one row per bucket key: reads the
-    * artifact (bucket keys + id lists only — never the corpus), groups on
-    * `keyCols`, flattens the id-list fragments, and atomically swaps the
-    * compacted directory in. O(artifact) — cheap next to the corpus
-    * re-sketch it replaces, since no text/vectors are read or hashed.
-    *
-    * The swap is two atomic renames under the append lock (live → `.old`,
-    * compacted → live). A crash BETWEEN them leaves the artifact path
-    * missing and the `.old` directory intact: every reader fails LOUDLY
-    * (no silent staleness — the sidecar invariant, directory-shaped),
-    * and the next [[compact]] AUTO-RECOVERS by renaming `.old` back
-    * before it sweeps debris — a blind sweep in that state would delete
-    * the only surviving copies (the original under `.old`, the compacted
-    * rows under the tmp dir) and lose the artifact outright.
-    *
-    * READER concurrency contract: the append lock serializes WRITERS
-    * only — screens take no lock (a screen is a plain parquet read, and
-    * locking every reader would serialize the whole screening fleet
-    * behind maintenance). A screen whose plan resolves the path inside
-    * the rename window of a normal, non-crashed compact can therefore
-    * fail transiently with FileNotFoundException. That failure is safe
-    * (loud, never a stale or torn read — the compacted directory that
-    * appears moments later is screen-equivalent) and [[screenRetrying]]
-    * is the blessed way to absorb it: wrap the screen's read+execute in
-    * the thunk and the one retry rebuilds against the compacted
-    * directory ([[graft.streaming.ScreenedIngest]] does this per
-    * micro-batch, so compacting under a live ingest is supported).
-    */
   /** Run `screen` tolerating ONE transient missing-file failure from a
     * concurrent [[compact]]'s rename window — the retry-once reader that
     * removes the "don't compact while a live screen reads" operational
@@ -144,25 +116,39 @@ private[graft] object SketchArtifact {
     false
   }
 
+  /** Merge fragment rows back to one row per bucket key: reads the
+    * artifact (bucket keys + id lists only — never the corpus), groups on
+    * `keyCols`, flattens the id-list fragments, and atomically swaps the
+    * compacted directory in. O(artifact) — cheap next to the corpus
+    * re-sketch it replaces, since no text/vectors are read or hashed.
+    *
+    * The swap is [[graft.sources.Compact.swapInPlace]] under the append
+    * lock (live → `.old`, compacted → live). A crash BETWEEN the renames
+    * leaves the artifact path missing and the `.old` directory intact:
+    * every reader fails LOUDLY (no silent staleness — the sidecar
+    * invariant, directory-shaped), and the next [[compact]] restores
+    * `.old` before it sweeps debris.
+    *
+    * READER concurrency contract: the append lock serializes WRITERS
+    * only — screens take no lock (a screen is a plain parquet read, and
+    * locking every reader would serialize the whole screening fleet
+    * behind maintenance). A screen whose plan resolves the path inside
+    * the rename window of a normal, non-crashed compact can therefore
+    * fail transiently with FileNotFoundException. That failure is safe
+    * (loud, never a stale or torn read — the compacted directory that
+    * appears moments later is screen-equivalent) and [[screenRetrying]]
+    * is the blessed way to absorb it: wrap the screen's read+execute in
+    * the thunk and the one retry rebuilds against the compacted
+    * directory ([[graft.streaming.ScreenedIngest]] does this per
+    * micro-batch, so compacting under a live ingest is supported).
+    */
   def compact(spark: SparkSession, path: String, keyCols: Seq[String],
       idsCol: String = "ids"): Unit = withArtifactLock(path) {
-    val fs = io(path)
-    val tmp = path.stripSuffix("/") + "._graft_compact_tmp"
-    val old = path.stripSuffix("/") + "._graft_compact_old"
-    // crash-between-renames state: live path missing, pre-compaction copy
-    // under `.old` — restore it FIRST (see the scaladoc; order matters:
-    // recovery before sweep, never the reverse)
-    if (!fs.exists(path) && fs.exists(old)) fs.rename(old, path)
-    // debris from a compact that crashed before its second rename is now
-    // safe to sweep: the live path exists (or this read fails loudly)
-    fs.deleteTree(tmp)
-    fs.deleteTree(old)
-    spark.read.parquet(path)
-      .groupBy(keyCols.map(col): _*)
-      .agg(flatten(collect_list(col(idsCol))).as(idsCol))
-      .write.mode("overwrite").parquet(tmp) // job runs HERE — reads finish before the swap
-    fs.rename(path, old)
-    fs.rename(tmp, path)
-    fs.deleteTree(old)
+    graft.sources.Compact.swapInPlace(path) { tmp =>
+      spark.read.parquet(path)
+        .groupBy(keyCols.map(col): _*)
+        .agg(flatten(collect_list(col(idsCol))).as(idsCol))
+        .write.mode("overwrite").parquet(tmp)
+    }
   }
 }

@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * directory into ~`targetBytes` files.
   *
   * This is the quiesced-directory tool: it swaps IN PLACE via two
-  * renames with rollback on failure, and a reader racing the swap can
+  * renames ([[swapInPlace]]: rollback on failure, crash recovery on the
+  * next run), and a reader racing the swap can
   * observe a brief path-missing window (one rename wide) — use it only
   * on directories nothing is actively reading. Live tables compact
   * through [[Snapshots.compact]] instead: the rewrite lands as a NEW
@@ -43,28 +44,52 @@ object Compact {
     */
   def compact(spark: SparkSession, path: String, targetBytes: Long): Int = {
     require(targetBytes > 0, "targetBytes must be positive")
-    require(!hasPartitionDirs(path),
-      s"$path has a partitioned (col=value) layout — compact each partition directory")
+    swapInPlace(path) { tmp =>
+      require(!hasPartitionDirs(path),
+        s"$path has a partitioned (col=value) layout — compact each partition directory")
+      val n = math.max(1, math.ceil(dataBytes(path).toDouble / targetBytes).toInt)
+      spark.read.parquet(path).coalesce(n).write.parquet(tmp)
+    }
+    dataFileCount(path)
+  }
+
+  /** Replace the directory `path` with what `rewrite` writes to the tmp
+    * dir it is handed (`rewrite` may read `path`; its job finishes
+    * before the swap). The swap is two renames: live → `._graft_compact_old`,
+    * tmp → live, then the old copy is deleted. One swap per path at a
+    * time: [[Compact.compact]] is the quiesced-directory tool and
+    * [[graft.operators.SketchArtifact.compact]] calls this under its
+    * append lock.
+    *
+    * Crash between the renames: the live path is missing and the
+    * original sits intact under the fixed `._graft_compact_old` name, so
+    * the next swap RESTORES it before sweeping debris — a blind sweep in
+    * that state would delete the only surviving copies. A failure of the
+    * second rename rolls the original back at once, so `path` never
+    * stays missing (a failed rollback is suppressed onto the root cause,
+    * never masks it).
+    */
+  private[graft] def swapInPlace(path: String)(rewrite: String => Unit): Unit = {
     val fs = io(path)
-    val n = math.max(1, math.ceil(dataBytes(path).toDouble / targetBytes).toInt)
-    val tmp = path + s".compact-${java.util.UUID.randomUUID()}"
-    try spark.read.parquet(path).coalesce(n).write.parquet(tmp)
+    val tmp = path.stripSuffix("/") + "._graft_compact_tmp"
+    val old = path.stripSuffix("/") + "._graft_compact_old"
+    // recovery before sweep, never the reverse
+    if (!fs.exists(path) && fs.exists(old)) fs.rename(old, path)
+    fs.deleteTree(tmp)
+    fs.deleteTree(old)
+    try rewrite(tmp)
     catch { case e: Throwable => fs.deleteTree(tmp); throw e }
-    val old = path + s".old-${java.util.UUID.randomUUID()}"
     try fs.rename(path, old)
     catch { case e: Throwable => fs.deleteTree(tmp); throw e } // rewrite discarded, path untouched
     try fs.rename(tmp, path)
     catch {
       case e: Throwable =>
-        // roll the original back so `path` never stays missing; a failed
-        // rollback must not MASK the root cause — suppress it instead
         try fs.rename(old, path)
         catch { case rb: Throwable => e.addSuppressed(rb) }
         fs.deleteTree(tmp)
         throw e
     }
     fs.deleteTree(old)
-    dataFileCount(path)
   }
 
   /** True if the directory uses a hive-style `col=value/` partition layout. */

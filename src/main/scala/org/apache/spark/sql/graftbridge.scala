@@ -66,19 +66,45 @@ object graftbridge {
     * `Ordering.Double.TotalOrdering` of the typed `TopKAgg` (-0.0 < 0.0)
     * only on signed-zero ties; ScaleOpsSpec pins the signed-zero and
     * NaN cases.
+    *
+    * Null keys fail the job loudly, naming the field: the struct
+    * ordering would rank a null field FIRST, so a null key would
+    * silently take a top-k slot (the typed `TopKAgg` threw instead).
     */
   def collectTopK(sortKey: Column, num: Int): Column =
-    column(new catalyst.expressions.aggregate.CollectTopK(expression(sortKey), num, true, 0, 0)
+    column(new catalyst.expressions.aggregate.CollectTopK(
+      NonNullSortKey(expression(sortKey), sortKey.toString), num, true, 0, 0)
       .toAggregateExpression())
 
-  /** Wait for queued listener-bus events to be delivered — measurement
-    * harnesses (OptProbe) tally task metrics through a SparkListener, and
-    * the bus is async, so a read taken right after an action can miss
-    * that action's tail events. Bounded (waitUntilEmpty throws on its
-    * timeout) and fail-soft: a still-draining bus after 60 s means a
-    * slightly stale tally, which must not abort a measurement sweep.
+  /** Passes `child` through, throwing on a null key or a null top-level
+    * struct field. Interpreted only: `CollectTopK.update` evaluates its
+    * child interpreted anyway, so there is no codegen to lose.
     */
-  def flushListenerBus(spark: SparkSession): Unit =
-    try spark.sparkContext.listenerBus.waitUntilEmpty(60000L)
-    catch { case _: java.util.concurrent.TimeoutException => () }
+  private case class NonNullSortKey(child: catalyst.expressions.Expression, keyDesc: String)
+      extends catalyst.expressions.UnaryExpression
+      with catalyst.expressions.codegen.CodegenFallback {
+    override def dataType: types.DataType = child.dataType
+    override def nullable: Boolean = false
+
+    override def eval(input: catalyst.InternalRow): Any = {
+      val v = child.eval(input)
+      if (v == null) throw new IllegalArgumentException(s"collectTopK: null sort key $keyDesc")
+      child.dataType match {
+        case st: types.StructType =>
+          val row = v.asInstanceOf[catalyst.InternalRow]
+          var i = 0
+          while (i < st.length) {
+            if (row.isNullAt(i)) throw new IllegalArgumentException(
+              s"collectTopK: null in sort-key field '${st(i).name}' of $keyDesc " +
+                "(a null would silently rank first and take a top-k slot)")
+            i += 1
+          }
+        case _ =>
+      }
+      v
+    }
+
+    override protected def withNewChildInternal(
+        newChild: catalyst.expressions.Expression): NonNullSortKey = copy(child = newChild)
+  }
 }

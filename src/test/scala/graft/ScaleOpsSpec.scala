@@ -131,6 +131,21 @@ class ScaleOpsSpec extends SparkSuite {
       native("n").toString)
   }
 
+  test("collectTopK fails loudly on a null sort-key field, naming the field") {
+    // the struct ordering ranks a null field FIRST: without the guard a
+    // null key silently takes a top-k slot
+    val rows = Seq(("g", Some(1.0), 1L), ("g", None, 2L), ("g", Some(3.0), 3L))
+    val e = intercept[Exception] {
+      rows.toDF("g", "key", "id").groupBy(col("g"))
+        .agg(org.apache.spark.sql.graftbridge.collectTopK(
+          struct(col("key").as("_1"), col("id").as("_2")), 2).as("top"))
+        .collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toList
+    assert(msgs.exists(_.contains("null in sort-key field '_1'")), msgs.mkString("\n"))
+  }
+
   test("MinHashUnionAgg merges signatures element-wise min") {
     val agg = new Aggregators.MinHashUnionAgg(4)
     val sigs = Seq(Seq(5L, 1L, 9L, 7L), Seq(3L, 2L, 8L, 9L)).toDS()

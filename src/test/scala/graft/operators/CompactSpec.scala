@@ -41,6 +41,27 @@ class CompactSpec extends SparkSuite {
     assert(spark.read.parquet(dir).count() == 100) // untouched
   }
 
+  test("compact restores the crash-between-renames state instead of failing on the missing path") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val dir = Files.createTempDirectory("graft-compact-crash").toString + "/t"
+    val expected = (0L until 3000L).map(i => (i, s"row$i"))
+    expected.toDF("id", "s").repartition(16).write.parquet(dir)
+    // a compact that died between its two renames: the live path is gone,
+    // the original sits under `._graft_compact_old`, a half-written tmp
+    // dir is left behind
+    Files.move(Paths.get(dir), Paths.get(dir + "._graft_compact_old"),
+      StandardCopyOption.ATOMIC_MOVE)
+    Files.createDirectories(Paths.get(dir + "._graft_compact_tmp"))
+    Files.write(Paths.get(dir + "._graft_compact_tmp", "part-junk.parquet"),
+      "debris".getBytes("UTF-8"))
+    val after = Compact.compact(spark, dir, targetBytes = 64L << 20)
+    assert(after >= 1 && after < 16)
+    assert(!Files.exists(Paths.get(dir + "._graft_compact_old")))
+    assert(!Files.exists(Paths.get(dir + "._graft_compact_tmp")))
+    assert(spark.read.parquet(dir).count() == 3000L)
+    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSet == expected.toSet)
+  }
+
   test("compactVersion is a no-op when the layout already meets the target") {
     import graft.sources.Snapshots
     val table = java.nio.file.Files.createTempDirectory("graft-compactnoop").toString + "/t"
