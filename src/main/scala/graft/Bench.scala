@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
 import org.apache.spark.sql.functions.col
 
 /** Benchmark main: runs every declared query against
@@ -154,7 +154,7 @@ object Bench {
       val skDir = graft.queries.QueryTmp.dir("bench-v10") + "/sketch"
       graft.operators.Similarity.srpSketch(old, "vec_id", "embedding", 64, bits = 6)
         .write.mode("overwrite").parquet(skDir)
-      val sk = spark.read.parquet(skDir)
+      val sk = graftbridge.readParquet(spark, skDir)
       bench("v10_screen_steady") {
         exec(graft.operators.Similarity.incrementalAnnKeep(batch, sk, old,
           "vec_id", "embedding", 64, 0.45, bits = 6))
@@ -243,7 +243,7 @@ object Bench {
           carry = Seq("embedding")) // mirrors the v11 gate's r19 shape
       val aDir = graft.queries.QueryTmp.dir("bench-v11") + "/assigned"
       assigned(emb2.filter(col("vec_id") % 10 =!= 7)).write.parquet(aDir)
-      val oldAssigned = spark.read.parquet(aDir)
+      val oldAssigned = graftbridge.readParquet(spark, aDir)
       val batchAssigned = assigned(emb2.filter(col("vec_id") % 10 === 7))
       bench("v11_screen_steady") {
         exec(graft.operators.Similarity.incrementalSemDedupKeep(
@@ -281,7 +281,7 @@ object Bench {
       val eDir = graft.queries.QueryTmp.dir("bench-v8c") + "/edges"
       graft.operators.Similarity.annKnnGraph(emb2, "vec_id", "embedding", 64, k = 3, bits = 6)
         .write.parquet(eDir)
-      val edges = spark.read.parquet(eDir)
+      val edges = graftbridge.readParquet(spark, eDir)
       bench("v8c_pagerank_converged") {
         val (pr, _) = graft.operators.Graph.pageRankConverged(
           edges, "vec_id", "neighbor", emb2, "vec_id", tol = 1e-6, maxIters = 100)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
 
 /** Session bootstrap for the graft engine.
   *
@@ -38,7 +38,10 @@ object GraftSession {
   * Stands in for the reference's dataset catalog — `(name, version)`
   * metadata binding via `DSet.loadSource()` (reference
   * `src/CoreLib/DSetGenerics.fs:367-378`) — with parquet's self-describing
-  * schema replacing the metadata files.
+  * schema replacing the metadata files. Like `loadSource`, binding the
+  * shape is metadata only: [[load]] reads the file's footer on the
+  * driver ([[org.apache.spark.sql.graftbridge.readParquet]]) and runs no
+  * Spark job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -46,7 +49,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
+    normalizeTs(graftbridge.readParquet(spark, s"$dir/$name.parquet"))
 
   /** Normalize the `ts` column to a session-zoned TIMESTAMP regardless of
     * how the driver encoded it on disk. Type-driven, so it works on every

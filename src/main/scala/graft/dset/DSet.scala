@@ -8,7 +8,7 @@ import scala.reflect.ClassTag
 import org.apache.spark.Partitioner
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession, graftbridge}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.storage.StorageLevel
 
@@ -790,11 +790,11 @@ object DSet {
     * reference's name+version metadata files).
     */
   def loadParquet[U: Encoder](spark: SparkSession, path: String): DSet[U] =
-    new DSet(spark.read.parquet(path).as[U])
+    new DSet(graftbridge.readParquet(spark, path).as[U])
 
   /** Untyped load for the relational path. */
   def loadParquetDF(spark: SparkSession, path: String): DSet[org.apache.spark.sql.Row] = {
-    val df = spark.read.parquet(path)
+    val df = graftbridge.readParquet(spark, path)
     new DSet(df)
   }
 

@@ -1,6 +1,7 @@
 package graft.examples
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge
 
 import graft.{GraftSession, Tables}
 import graft.streaming.Telemetry
@@ -18,7 +19,7 @@ object StreamingDedupExample {
     // QueryTmp.dir registers the shutdown cleanup — a raw
     // createTempDirectory would strand ~3x the events table per run
     val dir = graft.queries.QueryTmp.dir("dedup-example")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = graftbridge.readParquet(spark, s"$sfDir/events.parquet")
     raw.write.mode("overwrite").parquet(s"$dir/in")
     raw.write.mode("append").parquet(s"$dir/in")           // full duplicate
     raw.limit(100).write.mode("append").parquet(s"$dir/in") // partial triplicate
@@ -30,7 +31,7 @@ object StreamingDedupExample {
       .start()
     try q.processAllAvailable() finally q.stop()
 
-    val inRows = spark.read.parquet(s"$dir/in").count()
+    val inRows = graftbridge.readParquet(spark, s"$dir/in").count()
     val outRows = spark.table("deduped").count()
     val outDistinct = spark.table("deduped").select("event_id").distinct().count()
     val srcDistinct = raw.select("event_id").distinct().count()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, graftbridge}
 import org.apache.spark.sql.functions._
 
 /** Inverted token index over a document corpus — the retrieval side of
@@ -29,7 +29,7 @@ object InvertedIndex {
   def materialize(docs: DataFrame, idCol: String, textCol: String,
       path: String): DataFrame = {
     build(docs, idCol, textCol).write.mode("overwrite").parquet(path)
-    docs.sparkSession.read.parquet(path)
+    graftbridge.readParquet(docs.sparkSession, path)
   }
 
   /** Incremental maintenance: tokenize ONLY the new batch and append its
@@ -111,7 +111,7 @@ object InvertedIndex {
   def materializePositional(docs: DataFrame, idCol: String, textCol: String,
       path: String): DataFrame = {
     buildPositional(docs, idCol, textCol).write.mode("overwrite").parquet(path)
-    docs.sparkSession.read.parquet(path)
+    graftbridge.readParquet(docs.sparkSession, path)
   }
 
   /** Incremental maintenance for the POSITIONAL index — [[appendTo]]'s
@@ -264,13 +264,27 @@ object InvertedIndex {
     // exchange + sort of the whole postings set (r19 optimization round:
     // 2 Exchanges → 1, Window+Sort → none; values bit-identical — both
     // forms count the same non-empty tokens)
-    docs.select(col(idCol),
-        filter(split(col(textCol), " "), t => length(t) > 0).as("__toks"))
-      .select(col(idCol), explode(col("__toks")).as("token"),
+    scoredFrom(docs.select(col(idCol), tokens(textCol)), idCol)
+
+  /** `__toks`: the doc's non-empty tokens. */
+  private def tokens(textCol: String): org.apache.spark.sql.Column =
+    filter(split(col(textCol), " "), t => length(t) > 0).as("__toks")
+
+  /** [[buildScored]] from (idCol, `__toks`) rows. */
+  private def scoredFrom(toks: DataFrame, idCol: String): DataFrame =
+    toks.select(col(idCol), explode(col("__toks")).as("token"),
         size(col("__toks")).cast("long").as("dl"))
       .groupBy(col(idCol), col("token"), col("dl"))
       .agg(count(lit(1)).as("tf"))
       .select(col(idCol), col("token"), col("tf"), col("dl"))
+
+  /** A doc's token count over `__toks` rows, null for a zero-token doc
+    * (or a null text): those emit no postings, so [[corpusStats]] over a
+    * rebuild never counts them.
+    */
+  private def positiveDl = when(size(col("__toks")) > 0, size(col("__toks")).cast("long"))
+  private def docsAgg = count(positiveDl).as("n")
+  private def toksAgg = coalesce(sum(positiveDl), lit(0L)).as("toks")
 
   /** Materialize scored postings to `path` and reopen. Also persists the
     * exact corpus totals as a sidecar ([[writeTotals]]) so a NEW session
@@ -282,7 +296,7 @@ object InvertedIndex {
   def materializeScored(docs: DataFrame, idCol: String, textCol: String,
       path: String): DataFrame = {
     buildScored(docs, idCol, textCol).write.mode("overwrite").parquet(path)
-    val reopened = docs.sparkSession.read.parquet(path)
+    val reopened = graftbridge.readParquet(docs.sparkSession, path)
     writeTotals(path, corpusTotals(reopened, idCol))
     reopened
   }
@@ -294,8 +308,9 @@ object InvertedIndex {
     * what a full [[buildScored]] rebuild would produce for those docs.
     * Returns the batch's stats delta (docs, tokens) so the caller folds
     * it into precomputed corpus totals with [[mergeTotals]] — the (N,
-    * avgdl) update costs one batch-sized scan, NEVER the O(index)
-    * [[corpusStats]] pass, and the updated stats serve CORRECT scores
+    * avgdl) update is observed on the postings write itself (no extra
+    * scan), NEVER the O(index) [[corpusStats]] pass, and the updated
+    * stats serve CORRECT scores
     * (stale (N, avgdl) after a plain append silently mis-ranks). Caller
     * contract as [[appendTo]]: batch doc ids are new, and appends to one
     * index path are SINGLE-WRITER (serialize them upstream — two
@@ -332,7 +347,7 @@ object InvertedIndex {
       // write and the totals rewrite leaves NO sidecar — the next attach
       // recomputes exactly instead of silently serving stale (N, avgdl)
       val prior = priorTotals.orElse(readTotals(path)).getOrElse {
-        if (hasDataFiles(path)) corpusTotals(docs.sparkSession.read.parquet(path), idCol)
+        if (hasDataFiles(path)) corpusTotals(graftbridge.readParquet(docs.sparkSession, path), idCol)
         else (0L, 0L)
       }
       // in-progress marker for the append window: an attachScored racing
@@ -360,8 +375,17 @@ object InvertedIndex {
       io.touch(markerPath(path))
       io.delete(totalsPath(path))
       try {
-        buildScored(docs, idCol, textCol).write.mode("append").parquet(path)
-        val delta = batchTotals(docs, textCol)
+        // the batch totals ride the postings write as an Observation on
+        // the tokenized docs (no second job over the batch); an empty
+        // batch can be optimized to no scan at all, which reports no
+        // metrics row, and only then are the totals counted by a job
+        val obs = org.apache.spark.sql.Observation()
+        scoredFrom(docs.select(col(idCol), tokens(textCol)).observe(obs, docsAgg, toksAgg), idCol)
+          .write.mode("append").parquet(path)
+        val observed = obs.get
+        val delta =
+          if (observed.isEmpty) batchTotals(docs, textCol)
+          else (observed("n").asInstanceOf[Long], observed("toks").asInstanceOf[Long])
         writeTotals(path, mergeTotals(prior, delta))
         io.delete(markerPath(path))
         delta
@@ -441,7 +465,7 @@ object InvertedIndex {
     */
   def attachScored(spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String): (DataFrame, (Long, Double)) = {
-    val scored = spark.read.parquet(path)
+    val scored = graftbridge.readParquet(spark, path)
     val totals = readTotals(path).getOrElse {
       val t = corpusTotals(scored, idCol)
       // best-effort persist: a read-only mount (a consumer attaching a
@@ -516,16 +540,11 @@ object InvertedIndex {
     artifactIo(path).hasDataFiles(path)
 
   /** A batch's exact (docs, total tokens) — one batch-sized scan, the
-    * delta [[mergeTotals]] folds into corpus totals. Zero-token docs are
-    * excluded, matching [[corpusStats]] over a rebuild (they emit no
-    * postings, so a rebuild never counts them).
+    * delta [[mergeTotals]] folds into corpus totals ([[appendScored]]
+    * observes the same aggregates on its postings write instead).
     */
-  def batchTotals(docs: DataFrame, textCol: String): (Long, Long) = {
-    val row = docs
-      .select(size(filter(split(col(textCol), " "), t => length(t) > 0)).as("dl"))
-      .filter(col("dl") > 0)
-      .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("toks"))
-      .head()
+  private def batchTotals(docs: DataFrame, textCol: String): (Long, Long) = {
+    val row = docs.select(tokens(textCol)).agg(docsAgg, toksAgg).head()
     (row.getLong(0), row.getLong(1))
   }
 

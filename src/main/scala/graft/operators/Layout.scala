@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
 import org.apache.spark.sql.functions._
 
 import graft.functions.ZOrderFunctions.zValueN
@@ -68,7 +68,7 @@ object Layout {
     * z-ordered envelope against a single-column sort's).
     */
   def fileEnvelopes(spark: SparkSession, path: String, cols: Seq[String]): DataFrame = {
-    val withFile = spark.read.parquet(path)
+    val withFile = graftbridge.readParquet(spark, path)
       .withColumn("__file", input_file_name())
     val aggs = cols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
     withFile.groupBy(col("__file")).agg(aggs.head, aggs.tail: _*)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
 import org.apache.spark.sql.functions._
 
 import graft.sources.ArtifactIo
@@ -75,7 +75,7 @@ private[graft] object SketchArtifact {
     * constraint (the r16 documented workaround was a maintenance window).
     *
     * Caller contract: `screen` must BUILD AND EXECUTE its artifact read
-    * inside the thunk (`spark.read.parquet(path)` + the action), never
+    * inside the thunk (`graftbridge.readParquet(spark, path)` + the action), never
     * close over a pre-built DataFrame — a stale plan pins the OLD file
     * listing and would re-fail identically on retry; re-reading resolves
     * the freshly-compacted (screen-equivalent) directory. Side-effecting
@@ -145,7 +145,7 @@ private[graft] object SketchArtifact {
   def compact(spark: SparkSession, path: String, keyCols: Seq[String],
       idsCol: String = "ids"): Unit = withArtifactLock(path) {
     graft.sources.Compact.swapInPlace(path) { tmp =>
-      spark.read.parquet(path)
+      graftbridge.readParquet(spark, path)
         .groupBy(keyCols.map(col): _*)
         .agg(flatten(collect_list(col(idsCol))).as(idsCol))
         .write.mode("overwrite").parquet(tmp)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -395,7 +395,7 @@ object CurationQueries {
       Sharding.writeShards(
         Tables.load(s, dir, "documents").select(col("doc_id"), col("lang")),
         "doc_id", 4, out, SampleSeed)
-      s.read.parquet(out).select(col("doc_id"), col("lang"),
+      graftbridge.readParquet(s, out).select(col("doc_id"), col("lang"),
         col("shard").cast("int").as("shard"), col("pos"))
     },
 

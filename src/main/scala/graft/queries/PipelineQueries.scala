@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
 import org.apache.spark.sql.functions._
 
 import graft.{GraftFunctions, Tables}
@@ -101,7 +101,7 @@ object PipelineQueries {
       // exceeds 64 MiB — a data-size artifact, not a compaction bug)
       val after = Compact.compact(s, stage,
         targetBytes = math.max(1L << 20, Compact.dataBytes(stage) / 8))
-      s.read.parquet(stage)
+      graftbridge.readParquet(s, stage)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
         .withColumn("compacted", lit(after < before && after >= 1))
@@ -206,7 +206,7 @@ object PipelineQueries {
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
           col("o_orderpriority"))
         .write.mode("overwrite").partitionBy("o_orderpriority").parquet(out)
-      s.read.parquet(out)
+      graftbridge.readParquet(s, out)
         .filter(col("o_orderpriority") === "1-URGENT")
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("sum_price"))
@@ -258,7 +258,7 @@ object PipelineQueries {
           least(col("n_chars"), lit(1023L)).as("b"))
       graft.operators.Layout.zorderWrite(coords, "a", "b", bits = 10,
         numFiles = 4, path = out)
-      s.read.parquet(out)
+      graftbridge.readParquet(s, out)
         .select(col("doc_id"), col("a"), col("b"),
           graft.functions.ZOrderFunctions.zValue(col("a"), col("b"), 10).as("z"))
     },
@@ -281,7 +281,7 @@ object PipelineQueries {
           pmod(floor(col("doc_id") / lit(256L)).cast("long"), lit(256L)).as("c"))
       graft.operators.Layout.zorderWriteN(coords, Seq("a", "b", "c"), bits = 8,
         numFiles = 4, path = out)
-      s.read.parquet(out)
+      graftbridge.readParquet(s, out)
         .select(col("doc_id"), col("a"), col("b"), col("c"),
           graft.functions.ZOrderFunctions.zValueN(
             Seq(col("a"), col("b"), col("c")), 8).as("z"))
@@ -315,7 +315,7 @@ object PipelineQueries {
       // session ever observes a temporarily mutated value.
       val ss = s.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "8")
-      val rawSchema = ss.read.parquet(s"$dir/events.parquet").schema
+      val rawSchema = graftbridge.parquetSchema(ss, s"$dir/events.parquet")
       def evStream = Tables.normalizeTs(ss.readStream.schema(rawSchema).parquet(streamDir))
       val errors = evStream.filter(col("event_type") === "error")
         .select(col("user_id"), col("ts"), col("event_id"))
@@ -350,7 +350,7 @@ object PipelineQueries {
       // dedicated session for the 8-partition state-store sizing (see sj1)
       val ss = s.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "8")
-      val rawSchema = ss.read.parquet(s"$dir/events.parquet").schema
+      val rawSchema = graftbridge.parquetSchema(ss, s"$dir/events.parquet")
       val ev = Tables.normalizeTs(ss.readStream.schema(rawSchema).parquet(stage))
       val q = graft.streaming.Telemetry.dedupStream(ev, "event_id", "10 minutes")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -543,7 +543,7 @@ object PipelineQueries {
       val q = graft.streaming.ScreenedIngest.start(stream, "doc_id", "text",
         sketch, corpus, tmpDir("screened-ckpt"), maxBucketSize = Int.MaxValue)
       try q.processAllAvailable() finally q.stop()
-      s.read.parquet(corpus).select(col("doc_id"), col("lang"))
+      graftbridge.readParquet(s, corpus).select(col("doc_id"), col("lang"))
     },
 
     // Continuously-maintained BM25 index (st4's retrieval twin): three

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -85,7 +85,7 @@ object SketchQueries {
       // SparkContext; conf + memory-sink catalog entry stay private)
       val ss = s.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "8")
-      val schema = ss.read.parquet(stage).schema
+      val schema = graftbridge.parquetSchema(ss, stage)
       val mg = udaf(new Aggregators.MisraGriesAgg(256),
         org.apache.spark.sql.Encoders.STRING)
       val toksStream = ss.readStream.schema(schema)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -57,7 +57,7 @@ object TextQueries {
       InvertedIndex.build(docs.filter(col("doc_id") % 10 =!= 7), "doc_id", "text")
         .write.parquet(path)
       InvertedIndex.appendTo(docs.filter(col("doc_id") % 10 === 7), "doc_id", "text", path)
-      val postings = s.read.parquet(path)
+      val postings = graftbridge.readParquet(s, path)
       val probes = InvertedIndex.topTokensByDf(postings, 2)
       InvertedIndex.searchAll(postings, "doc_id", probes)
         .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
@@ -94,11 +94,11 @@ object TextQueries {
       val path = s"${QueryTmp.dir("bm25idx5")}/postings"
       InvertedIndex.buildScored(docs.filter(col("doc_id") % 10 =!= 7), "doc_id", "text")
         .write.parquet(path)
-      val totals0 = InvertedIndex.corpusTotals(s.read.parquet(path), "doc_id")
+      val totals0 = InvertedIndex.corpusTotals(graftbridge.readParquet(s, path), "doc_id")
       val delta = InvertedIndex.appendScored(
         docs.filter(col("doc_id") % 10 === 7), "doc_id", "text", path,
         priorTotals = Some(totals0))
-      val scored = s.read.parquet(path)
+      val scored = graftbridge.readParquet(s, path)
       val probes = InvertedIndex.topTokensByDf(scored, 3)
       InvertedIndex.searchBm25(scored, "doc_id", probes, topK = 10,
         stats = Some(InvertedIndex.statsOf(InvertedIndex.mergeTotals(totals0, delta))))
@@ -194,13 +194,13 @@ object TextQueries {
       val v1 = Snapshots.commitAppend(docs.filter(col("doc_id") % 10 =!= 7), table)
       InvertedIndex.buildScored(Snapshots.read(s, table, Some(v1)), "doc_id", "text")
         .write.parquet(idx)
-      val totals0 = InvertedIndex.corpusTotals(s.read.parquet(idx), "doc_id")
+      val totals0 = InvertedIndex.corpusTotals(graftbridge.readParquet(s, idx), "doc_id")
       // day 1: the batch commits; the maintainer reads ONLY the feed
       val v2 = Snapshots.commitAppend(docs.filter(col("doc_id") % 10 === 7), table)
       val feed = Snapshots.readChanges(s, table, fromVersion = v1, toVersion = Some(v2))
       val delta = InvertedIndex.appendScored(feed, "doc_id", "text", idx,
         priorTotals = Some(totals0))
-      val scored = s.read.parquet(idx)
+      val scored = graftbridge.readParquet(s, idx)
       val probes = InvertedIndex.topTokensByDf(scored, 3)
       InvertedIndex.searchBm25(scored, "doc_id", probes, topK = 10,
         stats = Some(InvertedIndex.statsOf(InvertedIndex.mergeTotals(totals0, delta))))
@@ -279,7 +279,7 @@ object TextQueries {
         .write.parquet(path)
       InvertedIndex.appendPositional(
         docs.filter(col("doc_id") % 10 === 7), "doc_id", "text", path)
-      val postings = s.read.parquet(path)
+      val postings = graftbridge.readParquet(s, path)
       val top = InvertedIndex.topGramByDf(docs, "text", 2)
       InvertedIndex.searchPhrase(postings, "doc_id", top)
         .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
@@ -521,7 +521,7 @@ object TextQueries {
       })
     }
     Dedup.incrementalNearDupKeepWithSketch(
-      docs.filter(col("doc_id") % 10 === 7), s.read.parquet(out), existing,
+      docs.filter(col("doc_id") % 10 === 7), graftbridge.readParquet(s, out), existing,
       "doc_id", "text")
       .select(col("doc_id"), col("lang"))
   }
@@ -557,7 +557,7 @@ object TextQueries {
       })
     }
     Dedup.incrementalNearDupKeepWithSketch(
-      docs.filter(col("doc_id") % 10 === 7), s.read.parquet(out), existingAll,
+      docs.filter(col("doc_id") % 10 === 7), graftbridge.readParquet(s, out), existingAll,
       "doc_id", "text")
       .select(col("doc_id"), col("lang"))
   }
@@ -592,7 +592,7 @@ object TextQueries {
       })
     }
     Dedup.incrementalSimhashKeep(
-      docs.filter(col("doc_id") % 10 === 7), s.read.parquet(out),
+      docs.filter(col("doc_id") % 10 === 7), graftbridge.readParquet(s, out),
       "doc_id", "text", maxBucketSize = Int.MaxValue)
       .select(col("doc_id"), col("lang"))
   }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -380,7 +380,7 @@ object VectorQueries {
       Similarity.srpSketch(old, "vec_id", "embedding", DIM, bits = 6)
         .write.mode("overwrite").parquet(sketchPath)
       Similarity.incrementalAnnKeep(
-        batch, s.read.parquet(sketchPath), old,
+        batch, graftbridge.readParquet(s, sketchPath), old,
         "vec_id", "embedding", DIM, 0.45, bits = 6)
         .select(col("vec_id"), col("label"))
     },
@@ -407,7 +407,7 @@ object VectorQueries {
         emb.filter(col("vec_id") % 10 === 8), "vec_id", "embedding", DIM,
         sketchPath, bits = 6)
       Similarity.incrementalAnnKeep(
-        emb.filter(col("vec_id") % 10 === 7), s.read.parquet(sketchPath), old,
+        emb.filter(col("vec_id") % 10 === 7), graftbridge.readParquet(s, sketchPath), old,
         "vec_id", "embedding", DIM, 0.45, bits = 6, maxBucketSize = Int.MaxValue)
         .select(col("vec_id"), col("label"))
     },
@@ -430,7 +430,7 @@ object VectorQueries {
         .write.mode("overwrite").parquet(path)
       Similarity.appendAssigned(assigned(e.filter(col("vec_id") % 10 === 8)), path)
       Similarity.incrementalSemDedupKeep(
-        assigned(e.filter(col("vec_id") % 10 === 7)), s.read.parquet(path),
+        assigned(e.filter(col("vec_id") % 10 === 7)), graftbridge.readParquet(s, path),
         "vec_id", "embedding", "cluster", 0.45, maxCellSize = Int.MaxValue)
         .select(col("vec_id"), col("label"))
     },

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, graftbridge}
 
 /** Small-file compaction — the housekeeping a continuously-appended
   * dataset needs (incremental appends like `InvertedIndex.appendTo` or
@@ -48,7 +48,7 @@ object Compact {
       require(!hasPartitionDirs(path),
         s"$path has a partitioned (col=value) layout — compact each partition directory")
       val n = math.max(1, math.ceil(dataBytes(path).toDouble / targetBytes).toInt)
-      spark.read.parquet(path).coalesce(n).write.parquet(tmp)
+      graftbridge.readParquet(spark, path).coalesce(n).write.parquet(tmp)
     }
     dataFileCount(path)
   }

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, graftbridge}
 
 /** Cross-session container cache — the Spark-native analog of the
   * reference's container-resident partition caches (reference
@@ -16,7 +16,9 @@ import org.apache.spark.sql.DataFrame
   * logical plan plus the input file set: any session that declares the
   * same computation over the same inputs derives the same key and
   * re-attaches to the published result with a plain columnar scan
-  * (column-pruned, partition-parallel) instead of re-running the plan.
+  * (column-pruned, partition-parallel) instead of re-running the plan;
+  * opening that scan runs no Spark job (the entry's schema is one
+  * driver-side footer read, [[org.apache.spark.sql.graftbridge.readParquet]]).
   *
   * Scale notes (100 TB): `cacheDir` would be a shared filesystem path
   * (HDFS/DBFS) or an object-store bucket; every filesystem primitive
@@ -316,7 +318,7 @@ object PlanCache {
         if (names.isEmpty) throw new IllegalStateException(
           s"plan cache: published entry $target has an empty file manifest — " +
             "a parquet write always commits at least one part file; evict the entry")
-        else spark.read.parquet(names.map(child(target, _)): _*)
+        else graftbridge.readParquet(spark, names.map(child(target, _)): _*)
       case None =>
         // On a manifest-committed store a missing manifest is a corpse
         // (eviction deletes children in unspecified order and can leave
@@ -330,7 +332,7 @@ object PlanCache {
           s"plan cache: entry $target on an object store has no file manifest — " +
             "a concurrent eviction gutted it between the hit check and this read; " +
             "re-attach to recompute")
-        else spark.read.parquet(target)
+        else graftbridge.readParquet(spark, target)
     }
 
   /** The store-appropriate primitives for `cacheDir` — the plan cache's

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
 
 /** Versioned dataset snapshots — the reproducibility contract a
   * training pipeline needs: every corpus revision (daily upsert, dedup
@@ -284,6 +284,8 @@ object Snapshots {
     // already in the chain must not pay a parquet write just to discard it
     val pre = tag.flatMap(taggedVersion(tableDir, _))
     if (pre.isDefined) return pre.get
+    var checkedBase = latestVersion(tableDir).getOrElse(0)
+    requireSameColumns(df, tableDir, checkedBase)
     val (dirName, own) = stage(df, tableDir)
     var committed: Option[Int] = None
     while (committed.isEmpty) {
@@ -300,6 +302,13 @@ object Snapshots {
       // land twice — once carried from the peer's version, once as our
       // own files.
       val base = latestVersion(tableDir).getOrElse(0)
+      if (base != checkedBase) {
+        // a commit moved the table since the check: its columns may differ
+        try requireSameColumns(df, tableDir, base)
+        catch { case e: IllegalArgumentException =>
+          fs.deleteTree(child(tableDir, dirName)); throw e }
+        checkedBase = base
+      }
       val replayed = tag.flatMap(taggedVersionFrom(tableDir, _, base))
       afterTagScan()
       replayed match {
@@ -320,6 +329,40 @@ object Snapshots {
     }
     committed.get
   }
+
+  /** Refuse an append whose columns differ from version `base`'s, by
+    * (name, type) and ignoring nullability (parquet writes every column
+    * nullable). The appended version carries `base`'s files next to the
+    * batch's, and a read takes ONE file's schema — whichever record file
+    * sorts first, so the random `d-<uuid>` names would decide it — so a
+    * differing batch would silently lose its extra column, or read the
+    * old rows' values (or its own) as nulls. A replace ([[commit]]) may
+    * change the schema. The base schema is one footer read: no Spark
+    * job, and no stat of the base's other files.
+    */
+  private def requireSameColumns(df: DataFrame, tableDir: String, base: Int): Unit =
+    if (base > 0) {
+      def cols(s: org.apache.spark.sql.types.StructType) =
+        s.fields.map(f => f.name -> f.dataType).toMap
+      val want = cols(graftbridge.parquetSchema(df.sparkSession,
+        recordPaths(tableDir, requireRecord(tableDir, base)): _*))
+      val got = cols(df.schema)
+      def show(names: Iterable[String], c: Map[String, org.apache.spark.sql.types.DataType]) =
+        names.toSeq.sorted.map(n => s"$n: ${c(n).simpleString}").mkString(", ")
+      val extra = got.keySet -- want.keySet
+      val missing = want.keySet -- got.keySet
+      val retyped = (got.keySet & want.keySet).toSeq.sorted
+        .filterNot(n => graftbridge.sameTypeIgnoringNullability(got(n), want(n)))
+      if (extra.nonEmpty || missing.nonEmpty || retyped.nonEmpty)
+        throw new IllegalArgumentException(
+          s"snapshots: commitAppend to $tableDir: the batch's columns differ from " +
+            s"v=$base's (extra: [${show(extra, got)}]; missing: [${show(missing, want)}]; " +
+            s"retyped: [${retyped.map(n => s"$n: ${want(n).simpleString} -> " +
+              got(n).simpleString).mkString(", ")}]) — an append carries v=$base's " +
+            "files, and a read takes one file's schema, so the batch would lose " +
+            "columns or read as nulls; re-shape the batch, or commit a replace " +
+            "(Snapshots.commit) to change the schema")
+    }
 
   /** Roll the table back to `version`'s content by publishing a NEW
     * version — the lakehouse RESTORE verb, and on this protocol it is
@@ -389,13 +432,17 @@ object Snapshots {
   /** Read a pinned version (or the latest) — always explicit leaf
     * files resolved from the immutable commit record; a lost
     * committer's orphan directory is unreachable by construction.
+    * Opening it runs no Spark job: the schema is one driver-side footer
+    * read of the record's first file ([[graftbridge.readParquet]]).
     */
   def read(spark: SparkSession, tableDir: String, version: Option[Int] = None): DataFrame = {
     val v = version.orElse(latestVersion(tableDir))
       .getOrElse(throw new IllegalArgumentException(s"no committed version under $tableDir"))
-    val rec = requireRecord(tableDir, v)
-    spark.read.parquet(resolvedFiles(rec).map(child(tableDir, _)): _*)
+    graftbridge.readParquet(spark, recordPaths(tableDir, requireRecord(tableDir, v)): _*)
   }
+
+  private def recordPaths(tableDir: String, rec: Record): Seq[String] =
+    resolvedFiles(rec).map(child(tableDir, _))
 
   /** The rows ADDED in `(fromVersion, toVersion]` — the changed-data
     * feed, walking base edges and unioning each append's own files
@@ -438,7 +485,7 @@ object Snapshots {
       s"readChanges: v=$fromVersion is not in v=$to's base chain of $tableDir " +
         s"(the walk reached v=$cur) — changes since a non-ancestor are undefined")
     if (delta.isEmpty) read(spark, tableDir, Some(to)).limit(0)
-    else spark.read.parquet(delta.toSeq: _*)
+    else graftbridge.readParquet(spark, delta.toSeq: _*)
   }
 
   /** (data-file count, total bytes) of `v`'s RESOLVED file set — one

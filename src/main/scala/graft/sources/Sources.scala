@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
 import org.apache.spark.sql.types.StructType
 
 /** Source/sink formats beyond parquet. The reference's storage layer is a
@@ -15,7 +15,7 @@ object Sources {
     df.write.mode("overwrite").parquet(path)
 
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graftbridge.readParquet(spark, path)
 
   /** CSV keeps a header; schema must be supplied on read (or inferred) —
     * prefer explicit schema at scale to avoid an inference pass.

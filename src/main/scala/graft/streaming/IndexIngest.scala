@@ -98,7 +98,7 @@ object IndexIngest {
             t => length(t) > 0)) > 0)
         val fresh = (
           if (idScreen && ArtifactPaths.hasParquet(indexPath)) {
-            val idx = spark.read.parquet(indexPath)
+            val idx = graftbridge.readParquet(spark, indexPath)
             // loud layout check: a wrong path (or a membership/positional
             // artifact) must name the contract, not die in a generic
             // unresolved-column AnalysisException deep in the anti-join

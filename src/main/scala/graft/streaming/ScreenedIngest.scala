@@ -90,15 +90,15 @@ object ScreenedIngest {
         val sims = Dedup.simhashSims(admissible, idCol, textCol).localCheckpoint()
         try {
           // the whole read-build-and-execute runs inside the retry thunk
-          // (fresh spark.read.parquet each attempt — see screenRetrying's
+          // (a fresh parquet read each attempt — see screenRetrying's
           // contract); the corpus/sketch WRITES stay outside it
           val kept = graft.operators.SketchArtifact.screenRetrying() {
             val screened = Dedup.incrementalSimhashKeepFromSims(
-              admissible, sims, spark.read.parquet(sketchPath), idCol,
+              admissible, sims, graftbridge.readParquet(spark, sketchPath), idCol,
               maxHamming, maxBucketSize)
             (
               if (idScreen && ArtifactPaths.hasParquet(corpusDir))
-                screened.join(spark.read.parquet(corpusDir).select(col(idCol)),
+                screened.join(graftbridge.readParquet(spark, corpusDir).select(col(idCol)),
                   Seq(idCol), "left_anti")
               else screened
             ).localCheckpoint()

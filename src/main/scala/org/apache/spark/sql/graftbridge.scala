@@ -11,6 +11,33 @@ object graftbridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `spark.read.parquet(paths: _*)` without its schema-inference job:
+    * the schema comes from the one footer that inference would read,
+    * read on the driver ([[execution.datasources.parquet.graftparquet.footerSchema]]),
+    * and is handed to the reader, so opening the files runs no Spark job.
+    * Schema, rows and partition columns equal the plain read's. Where
+    * only inference gives Spark's own result (merged schemas, a missing
+    * path, an empty or partitioned directory, …) this IS the plain read.
+    * Every parquet read of the engine goes through here.
+    */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    execution.datasources.parquet.graftparquet.footerSchema(spark, paths) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  /** `readParquet(spark, paths: _*).schema` without building the reader:
+    * the footer read alone, which never lists or stats the other paths.
+    */
+  def parquetSchema(spark: SparkSession, paths: String*): types.StructType =
+    execution.datasources.parquet.graftparquet.footerSchema(spark, paths)
+      .map(_.asNullable) // as the reader does with any data schema
+      .getOrElse(spark.read.parquet(paths: _*).schema)
+
+  /** `a` and `b` are the same type up to nullability, at any depth. */
+  def sameTypeIgnoringNullability(a: types.DataType, b: types.DataType): Boolean =
+    types.DataType.equalsIgnoreNullability(a, b)
+
   /** Register a custom expression as a SQL-callable temp function on an
     * existing session (`sessionState` is private[sql]).
     */

@@ -297,4 +297,43 @@ class SnapshotsSpec extends SparkSuite {
     // refused before anything was written into the old layout
     assert(new java.io.File(table).list().toSet == layout)
   }
+
+  test("commitAppend refuses a batch whose columns differ from the base version's, " +
+      "by name, before staging") {
+    val table = java.nio.file.Files.createTempDirectory("graft-snap-schema").toString + "/t"
+    Snapshots.commitAppend(Seq((1L, "a")).toDF("id", "s"), table) // v=1
+    def log = new java.io.File(table, "_log").list().toSet
+    def dataDirs = new java.io.File(table).list().filter(_.startsWith("d-")).toSet
+    val (log0, dirs0) = (log, dataDirs)
+    val batches = Seq(
+      "extra" -> Seq((2L, "b", 7)).toDF("id", "s", "x"),
+      "missing" -> Seq(2L).toDF("id"),
+      "retyped" -> Seq((2, "b")).toDF("id", "s"))
+    batches.foreach { case (kind, df) =>
+      val e = intercept[IllegalArgumentException](Snapshots.commitAppend(df, table))
+      val named = kind match {
+        case "extra" => "extra: [x: int]"
+        case "missing" => "missing: [s: string]"
+        case "retyped" => "retyped: [id: bigint -> int]"
+      }
+      assert(e.getMessage.contains(named), s"$kind: ${e.getMessage}")
+      assert(log == log0 && dataDirs == dirs0, s"$kind: the refused append left state behind")
+    }
+    // nullability alone is no difference; a replace may change the schema
+    assert(Snapshots.commitAppend(Seq((2L, "b")).toDF("id", "s")
+      .select(col("id"), coalesce(col("s"), lit("")).as("s")), table) == 2)
+    assert(Snapshots.commit(Seq(3L).toDF("id"), table) == 3)
+    assert(Snapshots.read(spark, table).as[Long].collect().toSeq == Seq(3L))
+    // a replace that lands between the check and the CAS: the retry
+    // re-checks against the new base and discards its stage
+    val dirs3 = dataDirs
+    var peer = false
+    val e = intercept[IllegalArgumentException](
+      Snapshots.commitAppendHooked(Seq(4L).toDF("id"), table, None, () =>
+        if (!peer) { peer = true; Snapshots.commit(Seq((5L, "e")).toDF("id", "s"), table) }))
+    assert(e.getMessage.contains("missing: [s: string]") && e.getMessage.contains("v=4"),
+      e.getMessage)
+    assert(log == log0 ++ Set("2", "3", "4"))
+    assert((dataDirs -- dirs3).size == 1, "only the peer's replace may leave a data dir")
+  }
 }
