@@ -532,9 +532,9 @@ object InvertedIndex {
 
   /** Whether `path` holds any data files (non-`_`/`.`-prefixed) — the
     * "does an index already live here" probe [[appendScored]] uses to
-    * decide between healing totals and starting from zero (the
-    * [[graft.sources.ArtifactIo]] copy of the FsUtil semantics, so the
-    * probe works on every supported store).
+    * decide between healing totals and starting from zero (through
+    * [[graft.sources.ArtifactIo]], so the probe works on every supported
+    * store).
     */
   private def hasDataFiles(path: String): Boolean =
     artifactIo(path).hasDataFiles(path)

@@ -401,10 +401,11 @@ object FacadeQueries {
     // filesystem whose rename REALLY is copy+delete and whose
     // create(noOverwrite) is non-exclusive (graft.sources
     // .RenameByCopyMockFs), i.e. exactly the primitives s3a/gs/wasb
-    // lack. The publish must therefore take the manifest-last protocol
-    // (copy parts in → `_graft_files` whole-object PUT → `_SUCCESS`),
-    // and the warm attach must resolve the manifest rather than list
-    // the directory. The aggregate is computed from the WARM attach, so
+    // lack. The publish is the one manifest-last protocol every store
+    // runs (move parts in — copy+delete here — then the `_graft_files`
+    // whole-object PUT as the commit point; no `_SUCCESS`), and the warm
+    // attach serves the files the manifest names rather than listing the
+    // directory. The aggregate is computed from the WARM attach, so
     // the hash only matches if the manifest-committed bytes are right;
     // the four contract booleans pin miss→hit→evict→miss. Every other
     // artifact family keeps rejecting these schemes — ArtifactIoSpec

@@ -82,36 +82,6 @@ private[graft] sealed trait ArtifactIo {
     */
   def writeFile(path: String, bytes: Array[Byte]): Unit
 
-  /** Atomic no-replace move returning `false` when the destination
-    * already exists (the plan cache's entry-claim primitive — on
-    * `false` the caller checks for a peer's published entry).
-    *
-    * No-replace atomicity contract: the local impl is true `ATOMIC_MOVE`
-    * (and the Hadoop impl special-cases `file:` down to it — Hadoop's
-    * `FileContext.rename(NONE)` on local stores is an exists-check THEN
-    * rename, a TOCTOU). On real HDFS-family stores the namespace rename
-    * is atomic. Directory-destination callers (the entry claims) are
-    * safe everywhere: even a raced check degrades to an `ENOTEMPTY`
-    * failure (caught, `false`) rather than a replace. FILE destinations
-    * differ per store: POSIX rename silently REPLACES a file (which is
-    * why the LOCAL [[tryPutIfAbsent]] uses `link(2)`, not this), while
-    * HDFS-family `rename` without OVERWRITE is one atomic namespace op
-    * that rejects an existing file destination — the Hadoop
-    * [[tryPutIfAbsent]] relies on exactly that (r19, verified against
-    * the FileContext/ClientProtocol contract). A caller on a NEW scheme
-    * class must re-verify before relying on file-destination no-replace.
-    */
-  def tryRenameNoReplace(src: String, dst: String): Boolean
-
-  /** Whether this store's [[rename]]/[[tryRenameNoReplace]] are atomic
-    * namespace operations (true for the local and HDFS-family impls).
-    * False means rename is copy+delete and lock files are unavailable —
-    * only protocols written rename-free and lock-free (the plan cache's
-    * manifest-last publish, the snapshot log) may run on such a store;
-    * everything else is rejected at [[ArtifactIo.forPath]].
-    */
-  def renameAtomic: Boolean = true
-
   /** One atomic conditional-PUT attempt: publish `bytes` whole at `path`
     * IFF nothing exists there; `false` when the name was already taken
     * (the caller's CAS lost — re-read and retry). The winner's bytes are
@@ -121,11 +91,10 @@ private[graft] sealed trait ArtifactIo {
     * Per store: the local impl is temp-write + `createLink` (link(2)
     * fails with EEXIST atomically — POSIX rename of a FILE destination
     * silently replaces, so a no-replace `ATOMIC_MOVE` is NOT a CAS
-    * here); the Hadoop impl is temp-write + [[tryRenameNoReplace]]
-    * (HDFS-family namespace renames atomically reject an existing file
+    * here); the Hadoop impl is temp-write + one no-replace namespace
+    * rename (HDFS-family renames atomically reject an existing file
     * destination; `file:` drops to the local impl); rename-by-copy
-    * object stores WITHOUT
-    * declared conditional-write support throw
+    * object stores WITHOUT declared conditional-write support throw
     * ([[ObjectStoreArtifactIo]]); stores declared under
     * [[ArtifactIo.ConditionalPutExtraSchemesKey]] map it to
     * `create(overwrite = false)` — the If-None-Match PUT, verdict atomic
@@ -148,13 +117,14 @@ private[graft] sealed trait ArtifactIo {
   /** Last-modified time of `path` in epoch ms; None when missing. */
   def mtimeMs(path: String): Option[Long]
 
-  /** Same-store copy of one file, by hard link where the store supports
-    * it (POSIX link counting keeps shared bytes alive until the last
-    * name drops) and by byte copy otherwise (HDFS exposes no user-facing
-    * hard links — the carry-forward cost there is O(bytes), the
-    * documented deployment note).
+  /** Move one FILE to a fresh name `dst` on the same store (an existing
+    * `dst` is refused or replaced, per store). NOT atomic on every store
+    * — one namespace rename locally and on HDFS-family stores, the
+    * connector's copy+delete on object stores — so callers move only
+    * files no reader can name yet (the plan cache's staged parts, before
+    * its manifest names them).
     */
-  def linkOrCopy(src: String, dst: String): Unit
+  def moveFile(src: String, dst: String): Unit
 
   /** Reclaim staging debris: delete direct children of `dir` whose name
     * starts with `prefix` and whose ENTIRE tree has been untouched for
@@ -163,9 +133,9 @@ private[graft] sealed trait ArtifactIo {
     */
   def sweepStale(dir: String, prefix: String, graceMs: Long): Unit
 
-  /** Whether `dir` holds any non-`_`/`.`-prefixed entries — the "does an
-    * artifact already live here" probe ([[FsUtil.hasDataFiles]]'s
-    * semantics on every store).
+  /** Whether `dir` holds any entry named as data
+    * ([[ArtifactIo.isDataFileName]]) — the "does an artifact already
+    * live here" probe, with one semantics on every store.
     */
   def hasDataFiles(dir: String): Boolean
 
@@ -369,12 +339,13 @@ private[graft] object ArtifactIo {
       .getOrElse(new Configuration())
 }
 
-/** The historical local-filesystem behavior, verbatim: `java.nio` probes,
+/** The historical local-filesystem behavior: `java.nio` probes,
   * `ATOMIC_MOVE` renames, OS advisory locks on persistent inodes
-  * ([[FsUtil.withFileLock]] — crashed holders release automatically).
+  * (crashed holders release automatically).
   */
 private[graft] object LocalArtifactIo extends ArtifactIo {
-  import java.nio.file.{Files, Paths, StandardCopyOption}
+  import java.nio.channels.{FileChannel, FileLock, OverlappingFileLockException}
+  import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
   def exists(path: String): Boolean = Files.exists(Paths.get(path))
 
@@ -386,7 +357,14 @@ private[graft] object LocalArtifactIo extends ArtifactIo {
 
   def delete(path: String): Unit = { Files.deleteIfExists(Paths.get(path)): Unit }
 
-  def deleteTree(path: String): Unit = FsUtil.deleteTree(Paths.get(path))
+  /** Recursive delete; tolerates concurrent removals. */
+  def deleteTree(path: String): Unit = {
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete(): Unit
+    }
+    rm(new java.io.File(path))
+  }
 
   def readBytes(path: String): Option[Array[Byte]] = {
     val p = Paths.get(path)
@@ -411,26 +389,14 @@ private[graft] object LocalArtifactIo extends ArtifactIo {
     Files.write(Paths.get(path), bytes): Unit
   }
 
-  def tryRenameNoReplace(src: String, dst: String): Boolean =
-    try {
-      Files.move(Paths.get(src), Paths.get(dst), StandardCopyOption.ATOMIC_MOVE)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-      // some filesystems report the collision as a generic move failure;
-      // only a collision is a retryable claim loss
-      case _: java.nio.file.FileSystemException if Files.exists(Paths.get(dst)) => false
-    }
-
   def tryPutIfAbsent(path: String, bytes: Array[Byte]): Boolean = {
     val dst = Paths.get(path)
     Files.createDirectories(dst.getParent)
     // temp-then-LINK, not createFile+write (a reader between create and
     // write would see an empty log record) and NOT ATOMIC_MOVE (on POSIX
     // a FILE-destination rename silently REPLACES — the no-replace
-    // failure only holds for directory destinations; the trait note on
-    // tryRenameNoReplace warns exactly this). link(2) fails with EEXIST
-    // atomically: the one POSIX primitive that is both
+    // failure only holds for directory destinations). link(2) fails with
+    // EEXIST atomically: the one POSIX primitive that is both
     // whole-content-at-publish and create-exclusive.
     val tmp = Files.createTempFile(dst.getParent, "." + dst.getFileName.toString, ".cas")
     try {
@@ -474,31 +440,73 @@ private[graft] object LocalArtifactIo extends ArtifactIo {
     if (!Files.exists(p)) None else Some(Files.getLastModifiedTime(p).toMillis)
   }
 
-  def linkOrCopy(src: String, dst: String): Unit = {
-    try Files.createLink(Paths.get(dst), Paths.get(src))
-    catch {
-      case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-        Files.copy(Paths.get(src), Paths.get(dst),
-          StandardCopyOption.COPY_ATTRIBUTES)
-    }
-    ()
+  def moveFile(src: String, dst: String): Unit = {
+    Files.move(Paths.get(src), Paths.get(dst)): Unit
   }
 
-  def sweepStale(dir: String, prefix: String, graceMs: Long): Unit =
-    FsUtil.sweepStale(Paths.get(dir), prefix + "*", graceMs)
+  /** Liveness is the newest mtime anywhere in a candidate's tree, not the
+    * top directory's: Spark's committer creates the staging dir once at
+    * job start and then writes task files deep under `_temporary/...`,
+    * so a long healthy write keeps its leaves fresh while the top dir
+    * looks ancient.
+    */
+  def sweepStale(dir: String, prefix: String, graceMs: Long): Unit = {
+    def newestMtimeMs(f: java.io.File): Long =
+      Option(f.listFiles()).fold(Seq.empty[Long])(_.toSeq.map(newestMtimeMs))
+        .foldLeft(f.lastModified())(math.max)
+    val cutoff = System.currentTimeMillis() - graceMs
+    // a listing broken by a concurrent publish/delete stops the sweep
+    // quietly instead of failing the caller's commit or claim
+    val names =
+      try listNames(dir)
+      catch { case _: java.io.IOException | _: java.io.UncheckedIOException => Seq.empty }
+    names.filter(_.startsWith(prefix)).foreach { n =>
+      val p = ArtifactIo.child(dir, n)
+      if (newestMtimeMs(new java.io.File(p)) < cutoff) deleteTree(p)
+    }
+  }
 
-  def hasDataFiles(dir: String): Boolean = FsUtil.hasDataFiles(dir)
+  def hasDataFiles(dir: String): Boolean = listNames(dir).exists(ArtifactIo.isDataFileName)
 
+  /** The lock file is created if absent and NEVER deleted — delete-by-name
+    * reclaim is a TOCTOU that can steal a live holder's lock; a crashed
+    * holder's OS lock releases automatically, so no grace heuristics. A
+    * holder that outlives `timeoutMs` fails THIS caller loudly (never the
+    * holder), naming the lock file and appending `timeoutHint`.
+    */
   def withLock[A](lockPath: String, timeoutMs: Long, what: String,
       timeoutHint: String)(body: => A): A =
-    FsUtil.withFileLock(Paths.get(lockPath), timeoutMs, what, timeoutHint) {
-      requireNoForeignProtocol(lockPath); body
+    withLockChannel(lockPath) { ch =>
+      val deadline = System.nanoTime() + timeoutMs * 1000000L
+      var lock = tryLock(ch)
+      while (lock == null) {
+        if (System.nanoTime() > deadline) throw new IllegalStateException(
+          s"$what: could not acquire lock $lockPath within ${timeoutMs / 1000}s — " +
+            timeoutHint)
+        Thread.sleep(5)
+        lock = tryLock(ch)
+      }
+      try { requireNoForeignProtocol(lockPath); body } finally lock.release()
     }
 
   def tryWithLock[A](lockPath: String)(body: => A): Option[A] =
-    FsUtil.tryWithFileLock(Paths.get(lockPath)) {
-      requireNoForeignProtocol(lockPath); body
+    withLockChannel(lockPath) { ch =>
+      val lock = tryLock(ch)
+      if (lock == null) None
+      else try { requireNoForeignProtocol(lockPath); Some(body) } finally lock.release()
     }
+
+  private def withLockChannel[A](lockPath: String)(use: FileChannel => A): A = {
+    val ch = FileChannel.open(Paths.get(lockPath),
+      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+    try use(ch) finally ch.close()
+  }
+
+  /** One attempt, null when held: same-JVM contention surfaces as either
+    * a null return or OverlappingFileLockException depending on timing.
+    */
+  private def tryLock(ch: FileChannel): FileLock =
+    try ch.tryLock() catch { case _: OverlappingFileLockException => null }
 
   /** Mixed-path-form tripwire (checked while HOLDING the OS advisory
     * lock, so it cannot race this protocol's own writers): the
@@ -593,6 +601,11 @@ private[graft] class HadoopArtifactIo(conf: Configuration) extends ArtifactIo {
 
   def writeAtomic(path: String, bytes: Array[Byte]): Unit = {
     val dst = new HPath(path)
+    // file: drops to the local impl — FileContext's OVERWRITE rename on
+    // local stores is delete-then-rename, a window in which the name is
+    // missing; HDFS-family renames replace in one namespace op
+    if (dst.toUri.getScheme == "file")
+      return LocalArtifactIo.writeAtomic(dst.toUri.getPath, bytes)
     val dir = dst.getParent
     val f = fs(dst)
     f.mkdirs(dir): Unit
@@ -614,30 +627,15 @@ private[graft] class HadoopArtifactIo(conf: Configuration) extends ArtifactIo {
     try out.write(bytes) finally out.close()
   }
 
-  def tryRenameNoReplace(src: String, dst: String): Boolean = {
-    val d = new HPath(dst)
-    // file: scheme: FileContext.rename(NONE) on the local store is an
-    // exists-check THEN rename (TOCTOU, not atomic no-replace) — drop to
-    // java.nio ATOMIC_MOVE on the local paths, exactly as tryAcquire does
-    // for lock creation. Real HDFS-family renames are namespace-atomic.
-    if (d.toUri.getScheme == "file")
-      return LocalArtifactIo.tryRenameNoReplace(
-        new HPath(src).toUri.getPath, d.toUri.getPath)
-    try { fc(d).rename(new HPath(src), d, Options.Rename.NONE); true }
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-      case _: java.nio.file.FileAlreadyExistsException => false
-      case e: java.io.IOException => if (fs(d).exists(d)) false else throw e
-    }
-  }
-
   def tryPutIfAbsent(path: String, bytes: Array[Byte]): Boolean = {
     val dst = new HPath(path)
-    // file: drops to the local impl (java.nio ATOMIC_MOVE — FileContext's
-    // no-replace rename on local stores is a TOCTOU, see
-    // tryRenameNoReplace); HDFS-family namespace renames are atomic for
-    // FILE destinations as for directories (one NameNode op), so
-    // temp-write + no-replace rename is a true CAS there.
+    // file: drops to the local impl — FileContext's no-replace rename on
+    // local stores is an exists-check THEN rename (a TOCTOU); on
+    // HDFS-family stores a rename without OVERWRITE is one NameNode op
+    // that atomically rejects an existing FILE destination, so
+    // temp-write + no-replace rename is a true CAS there (verified
+    // against the FileContext/ClientProtocol contract — a new scheme
+    // class must re-verify before relying on it).
     if (dst.toUri.getScheme == "file")
       return LocalArtifactIo.tryPutIfAbsent(dst.toUri.getPath, bytes)
     val dir = dst.getParent
@@ -646,8 +644,16 @@ private[graft] class HadoopArtifactIo(conf: Configuration) extends ArtifactIo {
       s".${dst.getName}.${java.util.UUID.randomUUID().toString.take(8)}.cas")
     writeFile(tmp.toString, bytes)
     val won =
-      try tryRenameNoReplace(tmp.toString, dst.toString)
-      catch { case e: java.io.IOException => delete(tmp.toString); throw e }
+      try { fc(dst).rename(tmp, dst, Options.Rename.NONE); true }
+      catch {
+        case _: FileAlreadyExistsException => false
+        case _: java.nio.file.FileAlreadyExistsException => false
+        // some stores report the collision as a generic failure; only a
+        // taken name is a lost CAS
+        case e: java.io.IOException if !fs(dst).exists(dst) =>
+          delete(tmp.toString); throw e
+        case _: java.io.IOException => false
+      }
     if (!won) delete(tmp.toString)
     won
   }
@@ -665,13 +671,10 @@ private[graft] class HadoopArtifactIo(conf: Configuration) extends ArtifactIo {
   def mtimeMs(path: String): Option[Long] =
     statOf(new HPath(path)).map(_.getModificationTime)
 
-  def linkOrCopy(src: String, dst: String): Unit = {
-    // no user-facing hard links on Hadoop stores — byte copy (the
-    // documented carry-forward deployment cost there)
+  def moveFile(src: String, dst: String): Unit = {
     val s = new HPath(src)
-    val d = new HPath(dst)
-    org.apache.hadoop.fs.FileUtil.copy(fs(s), s, fs(d), d,
-      /* deleteSource = */ false, /* overwrite = */ false, conf): Unit
+    if (!fs(s).rename(s, new HPath(dst)))
+      throw new java.io.IOException(s"artifact store: could not move $src to $dst")
   }
 
   def sweepStale(dir: String, prefix: String, graceMs: Long): Unit = {
@@ -840,13 +843,12 @@ private[graft] class HadoopArtifactIo(conf: Configuration) extends ArtifactIo {
   * WITHOUT the temp+rename dance that would be copy+delete underneath);
   * what they do NOT give is atomic rename (copy+delete: a mid-crash
   * leaves both names, a racing reader sees partial copies) or
-  * create-exclusive lock files — hence [[rename]]/[[tryRenameNoReplace]]/
-  * [[withLock]]/[[tryWithLock]] throw.
+  * create-exclusive lock files — hence [[rename]]/[[withLock]]/
+  * [[tryWithLock]] throw. [[moveFile]] is the connector's copy+delete,
+  * which the plan cache uses only on parts no manifest names yet.
   */
 private[graft] class ObjectStoreArtifactIo(conf: Configuration)
     extends HadoopArtifactIo(conf) {
-
-  override def renameAtomic: Boolean = false
 
   private def unsupported(op: String): Nothing =
     throw new UnsupportedOperationException(
@@ -859,9 +861,6 @@ private[graft] class ObjectStoreArtifactIo(conf: Configuration)
     writeFile(path, bytes) // whole-object PUT: atomic at close by store contract
 
   override def rename(src: String, dst: String): Unit = unsupported("rename")
-
-  override def tryRenameNoReplace(src: String, dst: String): Boolean =
-    unsupported("tryRenameNoReplace")
 
   override def withLock[A](lockPath: String, timeoutMs: Long, what: String,
       timeoutHint: String)(body: => A): A = unsupported("withLock")
@@ -883,21 +882,6 @@ private[graft] class ObjectStoreArtifactIo(conf: Configuration)
         "check-then-act. If the endpoint and its Hadoop connector honor " +
         "If-None-Match conditional creates, declare the scheme under '" +
         ArtifactIo.ConditionalPutExtraSchemesKey + "'")
-
-  /** No hard links on object stores, and [[HadoopArtifactIo.linkOrCopy]]'s
-    * `overwrite = false` copy is a non-atomic exists-check here — the
-    * manifest publish instead wants last-writer-wins whole-object copies
-    * (double publishes of one cache key copy IDENTICAL bytes under
-    * DIFFERENT part names; the manifest, written after, names one
-    * writer's complete set).
-    */
-  override def linkOrCopy(src: String, dst: String): Unit = {
-    val s = new org.apache.hadoop.fs.Path(src)
-    val d = new org.apache.hadoop.fs.Path(dst)
-    org.apache.hadoop.fs.FileUtil.copy(s.getFileSystem(conf), s,
-      d.getFileSystem(conf), d,
-      /* deleteSource = */ false, /* overwrite = */ true, conf): Unit
-  }
 }
 
 /** [[ObjectStoreArtifactIo]] plus the one capability the deployment

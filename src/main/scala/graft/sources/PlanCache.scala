@@ -20,29 +20,25 @@ import org.apache.spark.sql.{DataFrame, graftbridge}
   * opening that scan runs no Spark job (the entry's schema is one
   * driver-side footer read, [[org.apache.spark.sql.graftbridge.readParquet]]).
   *
+  * Publish protocol, one on every store: compute into a staging dir,
+  * move its part files into the entry, then write the `_graft_files`
+  * manifest naming them — the commit point. An entry is published iff
+  * its manifest exists; a hit reads it once and serves exactly the
+  * files it names, so parts nobody committed (a lost double-publisher's,
+  * a crashed publish's) are never read. See [[publish]] for why no step
+  * needs atomic rename or a lock: entries are KEYED BY CONTENT (same
+  * key ⇒ same bytes), so racing publishes are harmless.
+  *
   * Scale notes (100 TB): `cacheDir` would be a shared filesystem path
   * (HDFS/DBFS) or an object-store bucket; every filesystem primitive
-  * routes through [[ArtifactIo.forCachePath]]. Rename-atomic stores
-  * (scheme-less local/NFS, `hdfs://`, `abfss://`, `file:`) publish by
-  * atomic directory rename, the historical protocol. Rename-by-copy
-  * object stores (`s3a://`, `gs://`, `wasb://`, …) are admitted HERE —
-  * and only here among the artifact families — because the cache's
-  * semantics survive without atomic rename or locks (r18, gate pc1 on a
-  * simulated rename-by-copy store): entries are KEYED BY CONTENT (same
-  * key ⇒ same bytes by construction), so concurrent double publishes
-  * write identical data and the commit point is manifest-last — copy
-  * the staged part files in (distinct names per writer), publish a
-  * `_graft_files` manifest naming ONE writer's complete set (a
-  * whole-object PUT, atomic at close), then `_SUCCESS`. Readers resolve
-  * the manifest instead of listing the directory, so a loser's orphan
-  * part files are never read (the retention sweep reclaims the entry
-  * wholesale). The index and sketch families keep the strict
-  * rename-atomic allowlist — their commit protocols genuinely need
-  * atomic rename + create-exclusive ([[Snapshots]] needs only a
-  * conditional PUT, see [[ArtifactIo.forSnapshotPath]]). The
-  * cached artifact is plain parquet: readers get predicate pushdown and
-  * column pruning ON TOP of the cache, which the reference's opaque
-  * serialized partition blobs cannot offer.
+  * routes through [[ArtifactIo.forCachePath]], which admits
+  * rename-by-copy object stores (`s3a://`, `gs://`, `wasb://`, …) HERE —
+  * and only here among the artifact families, whose other protocols need
+  * atomic rename or create-exclusive (gate pc1 runs the lifecycle on a
+  * simulated rename-by-copy store). The cached artifact is plain
+  * parquet: readers get predicate pushdown and column pruning ON TOP of
+  * the cache, which the reference's opaque serialized partition blobs
+  * cannot offer.
   *
   * Staleness contract: since r15 the DEFAULT key tier is CONTENT keys —
   * per-file (size, mtime) keying, so an in-place overwrite of an input
@@ -92,7 +88,7 @@ object PlanCache {
   /** Session conf bounding published-entry lifetime:
     * `spark.graft.planCache.retentionMs = N` sweeps entries not ATTACHED
     * for N ms at every attach (last use = the `_graft_atime` marker each
-    * hit refreshes, falling back to the publish-time `_SUCCESS` mtime).
+    * hit refreshes, falling back to the publish-time manifest mtime).
     * Unset = entries live until [[invalidate]] (the original contract).
     *
     * This is the missing piece of the content-keys migration: under
@@ -252,8 +248,8 @@ object PlanCache {
 
   /** Attach to the cross-session cache: if a published result for this
     * plan exists under `cacheDir`, read it (no recompute — the reference's
-    * warm re-attach); otherwise compute once, publish atomically, and read
-    * the published copy so every consumer sees identical bytes.
+    * warm re-attach); otherwise compute once, publish, and read the
+    * published copy so every consumer sees identical bytes.
     */
   def readThrough(df: DataFrame, cacheDir: String, contentKeys: Boolean = true): DataFrame =
     readThroughWithOutcome(df, cacheDir, contentKeys)._1
@@ -262,29 +258,25 @@ object PlanCache {
     * [[lastOutcome]]).
     */
   def readThroughWithOutcome(df: DataFrame, cacheDir: String,
-      contentKeys: Boolean = true): (DataFrame, Outcome) = {
+      contentKeys: Boolean = true): (DataFrame, Outcome) =
+    readThroughHooked(df, cacheDir, contentKeys, _ => ())
+
+  /** [[readThroughWithOutcome]] with a TEST SEAM: [[publish]] calls
+    * `onStep` after each step of a miss ("staged", "moved-<k>" after the
+    * k-th part move, "manifest"). PlanCacheSpec throws from it to crash a
+    * publisher at each point; production callers pass a no-op.
+    */
+  private[graft] def readThroughHooked(df: DataFrame, cacheDir: String,
+      contentKeys: Boolean, onStep: String => Unit): (DataFrame, Outcome) = {
     val spark = df.sparkSession
     val key = fingerprint(df, effectiveContentKeys(df, contentKeys))
-    val fs = io(cacheDir)
-    fs.createDirs(cacheDir)
+    io(cacheDir).createDirs(cacheDir)
     sweepStaleTmp(cacheDir)
     val target = child(cacheDir, key)
-    val outcome =
-      if (servable(cacheDir, target)) { touchAtime(cacheDir, target); Hit }
-      else {
-        val tmp = child(cacheDir, s".tmp-$key-${java.util.UUID.randomUUID()}")
-        df.write.parquet(tmp)
-        // Plan-id marker (`_`-prefixed — parquet readers skip it): the
-        // FILE-LIST-tier fingerprint of the plan that produced this
-        // entry. A content-keyed entry's key embeds the input stats AT
-        // PUBLISH TIME, so after an in-place input change [[invalidate]]
-        // can no longer re-derive that key — the marker lets it find and
-        // evict every entry of this plan by one directory scan instead.
-        fs.writeFile(child(tmp, PlanIdFile),
-          fingerprint(df, contentKeys = false).getBytes("UTF-8"))
-        publish(cacheDir, tmp, target)
-        Miss
-      }
+    val (files, outcome) = readManifest(cacheDir, target) match {
+      case Some(names) => touchAtime(cacheDir, target); (names, Hit)
+      case None => (publish(df, cacheDir, key, onStep), Miss)
+    }
     // retention sweep AFTER the hit-touch above: the entry this attach
     // serves was just refreshed, so it cannot expire under its own read.
     // Throttled per cache dir (at most once per retention/20, floor 30 s
@@ -301,46 +293,14 @@ object PlanCache {
       if (due.longValue() == now) sweepExpired(cacheDir, r)
     }
     last = outcome
-    (readPublished(spark, cacheDir, target), outcome)
+    (graftbridge.readParquet(spark, files.map(child(target, _)): _*), outcome)
   }
-
-  /** Open a published entry: rename-committed entries are a plain
-    * directory read; manifest-committed entries (object stores — see
-    * [[publishByManifest]]) resolve `_graft_files` to explicit leaf
-    * files, so a lost double-publisher's orphan parts are never read.
-    */
-  private def readPublished(spark: org.apache.spark.sql.SparkSession,
-      cacheDir: String, target: String): DataFrame =
-    io(cacheDir).readBytes(child(target, FilesManifest)) match {
-      case Some(b) =>
-        val names = new String(b, "UTF-8").split("\n").toSeq
-          .map(_.trim).filter(_.nonEmpty)
-        if (names.isEmpty) throw new IllegalStateException(
-          s"plan cache: published entry $target has an empty file manifest — " +
-            "a parquet write always commits at least one part file; evict the entry")
-        else graftbridge.readParquet(spark, names.map(child(target, _)): _*)
-      case None =>
-        // On a manifest-committed store a missing manifest is a corpse
-        // (eviction deletes children in unspecified order and can leave
-        // `_SUCCESS` briefly manifest-less) — falling back to the
-        // directory listing would read a lost double-publisher's orphan
-        // parts (doubled rows), exactly the read mode the manifest
-        // protocol exists to avoid. The attach path already re-misses on
-        // manifest-less entries (see `servable`); this is the
-        // defense-in-depth for the narrow hit-check→read race window.
-        if (!io(cacheDir).renameAtomic) throw new IllegalStateException(
-          s"plan cache: entry $target on an object store has no file manifest — " +
-            "a concurrent eviction gutted it between the hit check and this read; " +
-            "re-attach to recompute")
-        else graftbridge.readParquet(spark, target)
-    }
 
   /** The store-appropriate primitives for `cacheDir` — the plan cache's
     * PERMISSIVE resolution ([[ArtifactIo.forCachePath]]): rename-atomic
     * stores get the shared artifact contract, rename-by-copy object
     * stores get the reduced [[ObjectStoreArtifactIo]] whose rename/lock
-    * primitives throw (this file's publish/read paths branch on
-    * [[ArtifactIo.renameAtomic]] and never call them there).
+    * primitives throw (this file never calls them).
     */
   private def io(dir: String): ArtifactIo = ArtifactIo.forCachePath(dir)
 
@@ -366,23 +326,22 @@ object PlanCache {
       System.currentTimeMillis().toString.getBytes("UTF-8"))
     catch { case _: java.io.IOException => () }
 
-  /** Evict published entries not attached within `retentionMs` (see
+  /** Evict entries not attached within `retentionMs` (see
     * [[RetentionConf]]). Last use = the atime marker's mtime when
-    * present, else the `_SUCCESS` publish mtime. Tmp staging dirs have
-    * their own crash-grace sweep; unpublished corpses are reclaimed by
-    * [[publish]]'s retry path — both are skipped here.
+    * present, else the manifest's (publish time), else the plan-id
+    * marker's — so an entry whose publish died before its manifest, or
+    * one an older release published without a manifest, still ages out.
+    * Tmp staging dirs have their own crash-grace sweep and are skipped.
     */
   private def sweepExpired(cacheDir: String, retentionMs: Long): Unit = {
     val fs = io(cacheDir)
     val cutoff = System.currentTimeMillis() - retentionMs
-    fs.listNames(cacheDir).foreach { fn =>
+    fs.listNames(cacheDir).filterNot(_.startsWith(".")).foreach { fn =>
       val p = child(cacheDir, fn)
       try {
-        if (!fn.startsWith(".") && isPublished(cacheDir, p)) {
-          val lastUsed = fs.mtimeMs(child(p, AtimeFile))
-            .orElse(fs.mtimeMs(child(p, "_SUCCESS")))
-          if (lastUsed.exists(_ < cutoff)) fs.deleteTree(p)
-        }
+        val lastUsed = Iterator(AtimeFile, FilesManifest, PlanIdFile)
+          .flatMap(f => fs.mtimeMs(child(p, f))).nextOption()
+        if (lastUsed.exists(_ < cutoff)) evict(cacheDir, p)
       } catch { case _: java.io.IOException => () } // racing evict/publish
     }
   }
@@ -417,11 +376,7 @@ object PlanCache {
     val listKey = fingerprint(df, contentKeys = false)
     val keys = Seq(listKey, fingerprint(df, contentKeys = true)).distinct
     var existed = false
-    def evict(target: String): Unit = {
-      if (isPublished(cacheDir, target)) existed = true
-      if (fs.exists(target)) fs.deleteTree(target)
-    }
-    keys.foreach(k => evict(child(cacheDir, k)))
+    keys.foreach(k => existed |= evict(cacheDir, child(cacheDir, k)))
     // stale-stat content-keyed entries: match by the plan-id marker
     fs.listNames(cacheDir).foreach { fn =>
       val p = child(cacheDir, fn)
@@ -431,10 +386,23 @@ object PlanCache {
       val markerMatches =
         try fs.readBytes(child(p, PlanIdFile)).exists(new String(_, "UTF-8") == listKey)
         catch { case _: java.io.IOException => false }
-      if (!fn.startsWith(".") && markerMatches) evict(p)
+      if (!fn.startsWith(".") && markerMatches) existed |= evict(cacheDir, p)
     }
     sweepStaleTmp(cacheDir)
     existed
+  }
+
+  /** Un-publish `target`, then delete it; returns whether it was
+    * published. The manifest goes first, so an eviction that dies midway
+    * leaves an unpublished directory the next attach re-publishes — never
+    * a manifest naming deleted parts.
+    */
+  private def evict(cacheDir: String, target: String): Boolean = {
+    val fs = io(cacheDir)
+    val published = fs.exists(child(target, FilesManifest))
+    fs.delete(child(target, FilesManifest))
+    fs.deleteTree(target)
+    published
   }
 
   private val PlanIdFile = "_graft_plan"
@@ -443,8 +411,8 @@ object PlanCache {
     * its tree is considered the debris of a crashed writer and reclaimed
     * (a live long-running parquet write keeps refreshing task files deep
     * under `_temporary/...` even while the top dir's mtime stays at job
-    * start — FsUtil.newestMtimeMs checks the whole tree, so only a truly
-    * dead writer's dir goes quiet for this long).
+    * start — [[ArtifactIo.sweepStale]] checks the whole tree, so only a
+    * truly dead writer's dir goes quiet for this long).
     */
   private val TmpGraceMs = 6 * 60 * 60 * 1000L
 
@@ -457,68 +425,32 @@ object PlanCache {
   private def sweepStaleTmp(cacheDir: String, graceMs: Long = TmpGraceMs): Unit =
     io(cacheDir).sweepStale(cacheDir, ".tmp-", graceMs)
 
-  private def isPublished(cacheDir: String, target: String): Boolean =
-    io(cacheDir).exists(child(target, "_SUCCESS"))
-
-  /** Whether a published entry can actually be SERVED: on rename-committed
-    * stores `_SUCCESS` is enough (the rename was atomic — the directory is
-    * whole); on manifest-committed object stores the entry must still hold
-    * its `_graft_files` manifest — `_SUCCESS` without it is an
-    * eviction-race corpse, and attaching to it as a Hit would either fail
-    * the read loudly ([[readPublished]]) or, worse, silently fall back to
-    * a directory listing that includes a lost double-publisher's orphan
-    * parts. A manifest-less corpse re-misses here and
-    * [[publishByManifest]] repairs the entry in place.
-    */
-  private def servable(cacheDir: String, target: String): Boolean =
-    isPublished(cacheDir, target) &&
-      (io(cacheDir).renameAtomic || io(cacheDir).exists(child(target, FilesManifest)))
-
-  /** Atomic rename commit; on a concurrent publish keep the winner and
-    * discard our copy (both hold identical bytes by construction). A
-    * target that EXISTS but is not published (no `_SUCCESS` — the corpse
-    * of a crash mid-invalidate, or an invalidate racing a publish) is a
-    * dead end no future attach could ever recover from if left in place:
-    * reclaim it and retry the rename instead of discarding our good copy
-    * and wedging the key forever.
-    */
-  /** Data-file manifest inside a manifest-committed entry (`_`-prefixed
-    * — parquet readers skip it): the newline-separated part-file names
-    * the publish committed, written as ONE whole-object PUT after every
-    * named file is in place, read by [[readPublished]].
+  /** The entry's commit point (`_`-prefixed — parquet readers skip it):
+    * the newline-separated part names one publish moved in, written by
+    * [[publish]], read once per hit.
     */
   private val FilesManifest = "_graft_files"
 
-  /** Rename-free, lock-free publish for rename-by-copy object stores —
-    * why a double publish is SAFE here and nowhere else: (1) the entry
-    * key is a content fingerprint, so two writers of one key hold
-    * byte-identical results (under distinct part names); (2) each copies
-    * its complete set in, then swaps the manifest (atomic whole-object
-    * PUT) naming ITS files, then marks `_SUCCESS` — a reader resolves
-    * whichever manifest is current, always one writer's COMPLETE set,
-    * and orphan parts of the losing writer are dead names no read ever
-    * touches (reclaimed with the entry by eviction/retention). No
-    * ordering depends on rename atomicity or lock files.
+  /** The part names `target`'s manifest commits; None when the entry is
+    * not published (no manifest, or an empty one — a parquet write always
+    * commits at least one part).
     */
-  /** Whether `target`'s CURRENT manifest names a non-empty file set that
-    * fully exists — the manifest path's corpse detector: an invalidate
-    * racing a publish can delete copied parts before the manifest/
-    * `_SUCCESS` land, and a published entry whose manifest names missing
-    * files would otherwise serve Hits that throw forever.
-    */
-  private def manifestIntact(cacheDir: String, target: String): Boolean = {
-    val fs = io(cacheDir)
-    fs.readBytes(child(target, FilesManifest)) match {
-      case None => false
-      case Some(b) =>
-        val names = new String(b, "UTF-8").split("\n").toSeq
-          .map(_.trim).filter(_.nonEmpty)
-        val present = fs.listNames(target).toSet
-        names.nonEmpty && names.forall(present.contains)
-    }
-  }
+  private def readManifest(cacheDir: String, target: String): Option[Seq[String]] =
+    io(cacheDir).readBytes(child(target, FilesManifest))
+      .map(b => new String(b, "UTF-8").split("\n").toSeq.map(_.trim).filter(_.nonEmpty))
+      .filter(_.nonEmpty)
 
-  /** Best-effort staging reclaim: once a servable entry exists (or the
+  /** [[readManifest]], only when every named part exists — the
+    * publisher's check that no racing invalidate deleted parts before its
+    * manifest landed.
+    */
+  private def intactManifest(cacheDir: String, target: String): Option[Seq[String]] =
+    readManifest(cacheDir, target).filter { names =>
+      val present = io(cacheDir).listNames(target).toSet
+      names.forall(present.contains)
+    }
+
+  /** Best-effort staging reclaim: once an entry is served (or the
     * original failure is already propagating), a cleanup hiccup must not
     * fail the caller — the grace sweep reclaims what this misses.
     */
@@ -526,85 +458,77 @@ object PlanCache {
     try io(cacheDir).deleteTree(tmp)
     catch { case _: java.io.IOException => () }
 
-  private def publishByManifest(cacheDir: String, tmp: String, target: String): Unit = {
+  /** Compute `df` and publish it as entry `key`, manifest-last, on every
+    * store. Returns the part names of the manifest it leaves current.
+    *  1. Stage: `df.write.parquet` into `.tmp-<key>-<uuid>` (a crashed
+    *     writer's is reclaimed by the grace sweep).
+    *  2. Move each staged part into the entry. Part names are unique per
+    *     writer and nothing reads a part before a manifest names it, so
+    *     no move needs to be atomic: `Files.move` locally, one namespace
+    *     rename on HDFS, the connector's copy+delete on object stores.
+    *  3. Write the manifest with [[ArtifactIo.writeAtomic]] — a
+    *     whole-object PUT on object stores, temp + atomic rename
+    *     elsewhere — so a racing hit reads the old manifest or the new,
+    *     never a torn one.
+    * A double publish is safe because the key is a content fingerprint:
+    * racing writers of one key move byte-identical results under
+    * distinct part names, and the current manifest always names one
+    * writer's COMPLETE set; the loser's parts are dead names, reclaimed
+    * with the entry. A racing invalidate can delete parts before our
+    * manifest lands: the intact check catches that corpse, un-publishes
+    * it and re-runs the publish from the staged write (the moves emptied
+    * the staging dir), at most three times.
+    *
+    * Only a store IOException reclaims the staging dir early; any other
+    * failure leaves it, as a dead process would, to the grace sweep.
+    */
+  private def publish(df: DataFrame, cacheDir: String, key: String,
+      onStep: String => Unit): Seq[String] = {
     val fs = io(cacheDir)
+    val target = child(cacheDir, key)
+    val manifest = child(target, FilesManifest)
+    // Plan-id marker (`_`-prefixed — parquet readers skip it): the
+    // FILE-LIST-tier fingerprint of the plan that produced this entry. A
+    // content-keyed entry's key embeds the input stats AT PUBLISH TIME,
+    // so after an in-place input change [[invalidate]] can no longer
+    // re-derive that key — the marker lets it find and evict every entry
+    // of this plan by one directory scan instead.
+    val planId = fingerprint(df, contentKeys = false).getBytes("UTF-8")
     var attempts = 0
     while (attempts < 3) {
-      // winner holds identical bytes — but only count a publish whose
-      // manifest survived intact (a racing invalidate can gut one)
-      if (isPublished(cacheDir, target) && manifestIntact(cacheDir, target)) {
-        discardTmp(cacheDir, tmp); return
-      }
-      // a mid-protocol store failure must reclaim the result-sized
-      // staging copy before propagating (the rename path's catch does
-      // the same) — without masking the ORIGINAL failure if the reclaim
-      // itself hiccups. Orphan parts already copied into `target` are
-      // harmless: no manifest names them.
+      val tmp = child(cacheDir, s".tmp-$key-${java.util.UUID.randomUUID()}")
       try {
-        val dataFiles = fs.listNames(tmp)
-          .filter(ArtifactIo.isDataFileName)
+        df.write.parquet(tmp)
+        onStep("staged")
+        val parts = fs.listNames(tmp).filter(ArtifactIo.isDataFileName).sorted
         fs.createDirs(target)
-        dataFiles.foreach(fn => fs.linkOrCopy(child(tmp, fn), child(target, fn)))
-        // the plan-id marker travels too — invalidate's stale-stat scan
-        // needs it inside the published entry
-        fs.readBytes(child(tmp, PlanIdFile))
-          .foreach(b => fs.writeFile(child(target, PlanIdFile), b))
-        fs.writeFile(child(target, FilesManifest),
-          dataFiles.sorted.mkString("\n").getBytes("UTF-8"))
-        fs.touch(child(target, "_SUCCESS"))
+        fs.writeAtomic(child(target, PlanIdFile), planId)
+        parts.zipWithIndex.foreach { case (fn, i) =>
+          fs.moveFile(child(tmp, fn), child(target, fn))
+          onStep(s"moved-${i + 1}")
+        }
+        fs.writeAtomic(manifest, parts.mkString("\n").getBytes("UTF-8"))
+        onStep("manifest")
       } catch {
-        case e: java.io.IOException =>
-          try fs.deleteTree(tmp)
-          catch { case e2: java.io.IOException => e.addSuppressed(e2) }
-          throw e
+        case e: java.io.IOException => discardTmp(cacheDir, tmp); throw e
       }
-      // post-publish verification: if an invalidate raced the copies
-      // (deleted parts before the manifest landed), the entry is a
-      // published corpse — un-publish it and retry from the staging
-      // copy, which still holds the full result. The re-read manifest
-      // may be a CONCURRENT winner's (complete by ITS copies) — that
-      // verifies intact and we stand down.
-      if (manifestIntact(cacheDir, target)) { discardTmp(cacheDir, tmp); return }
-      // Transient un-publish window, acknowledged: a CONCURRENT winner
-      // that published between the intact-check above and these deletes
-      // is briefly un-published until this loop re-publishes — benign for
-      // a cache (a reader in the window misses and recomputes identical
-      // bytes) and bounded by the attempts cap.
-      try {
-        fs.delete(child(target, "_SUCCESS"))
-        fs.delete(child(target, FilesManifest))
-      } catch { case _: java.io.IOException => () }
+      discardTmp(cacheDir, tmp)
+      // the current manifest may be a concurrent winner's — complete by
+      // ITS moves, identical bytes — in which case we serve it
+      intactManifest(cacheDir, target) match {
+        case Some(names) => return names
+        case None =>
+          // Transient un-publish window, acknowledged: a CONCURRENT winner
+          // that published between the check above and this delete is
+          // briefly un-published until this loop re-publishes — benign
+          // for a cache (a reader in the window misses and recomputes
+          // identical bytes) and bounded by the attempts cap.
+          try fs.delete(manifest) catch { case _: java.io.IOException => () }
+      }
       attempts += 1
     }
-    discardTmp(cacheDir, tmp)
     throw new IllegalStateException(
-      s"plan cache: could not publish $target after $attempts manifest commits — " +
-        "a concurrent invalidate loop is gutting this key's entries as fast as " +
-        "they publish")
-  }
-
-  private def publish(cacheDir: String, tmp: String, target: String): Unit = {
-    val fs = io(cacheDir)
-    if (!fs.renameAtomic) return publishByManifest(cacheDir, tmp, target)
-    var attempts = 0
-    while (attempts < 3) {
-      // a NON-collision rename failure (permission flap, store hiccup
-      // with the target absent) must still reclaim the staged copy
-      // before propagating — the pre-seam behavior; leaking a
-      // result-sized .tmp dir per failure until the grace sweep is not
-      val renamed =
-        try fs.tryRenameNoReplace(tmp, target)
-        catch { case e: java.io.IOException => fs.deleteTree(tmp); throw e }
-      if (renamed) return
-      if (isPublished(cacheDir, target)) { discardTmp(cacheDir, tmp); return } // winner holds identical bytes
-      fs.deleteTree(target) // unpublished corpse — reclaim and retry
-      attempts += 1
-      if (attempts >= 3) {
-        fs.deleteTree(tmp)
-        throw new IllegalStateException(
-          s"plan cache: could not publish $target after $attempts collisions with " +
-            "unpublished corpses — a concurrent invalidate/publish loop is thrashing this key")
-      }
-    }
+      s"plan cache: could not publish $target after $attempts attempts — a " +
+        "concurrent invalidate loop is gutting this key's entries as fast as they publish")
   }
 }

@@ -141,35 +141,51 @@ object Snapshots {
 
   private def requireRecord(tableDir: String, v: Int): Record =
     readRecord(tableDir, v).getOrElse {
-      requireNoLegacyLayout(tableDir)
+      requireNoForeignLayout(tableDir)
       throw new IllegalArgumentException(
         s"snapshots: no committed version $v under $tableDir " +
           "(never committed, or dropped by retention)")
     }
 
   /** The committed versions — one strongly-consistent `_log` listing.
-    * An EMPTY log is the one moment a legacy layout can be in play (a
+    * An EMPTY log is the one moment a foreign layout can be in play (a
     * table's first commit or read), so only then does it pay the
-    * [[requireNoLegacyLayout]] probe.
+    * [[requireNoForeignLayout]] probe.
     */
   private def logVersions(tableDir: String): Seq[Int] = {
     val vs = io(tableDir).listNames(child(tableDir, LogDir)).flatMap(_.toIntOption)
-    if (vs.isEmpty) requireNoLegacyLayout(tableDir)
+    if (vs.isEmpty) requireNoForeignLayout(tableDir)
     vs
   }
 
-  /** Refuse a directory the retired rename protocol wrote (`_latest`
-    * pointer + `v=N/` data, no log): read as an empty table it would
-    * hide every old row, and a commit would bury them under `_log/1`.
+  /** Refuse a directory whose rows this protocol cannot see — read as an
+    * empty table it would hide them, and a first commit would bury them
+    * under a `_log/1` naming only the new batch:
+    *  - the retired rename protocol's layout (`_latest` pointer + `v=N/`
+    *    data, no log);
+    *  - plain parquet: data FILES at the top level. `d-*` directories
+    *    are not counted — a crashed first commit leaves those.
+    * One listing of `tableDir`.
     */
-  private def requireNoLegacyLayout(tableDir: String): Unit =
-    if (io(tableDir).exists(child(tableDir, "_latest")))
+  private def requireNoForeignLayout(tableDir: String): Unit = {
+    val top = io(tableDir).listEntries(tableDir)
+    if (top.exists(_._1 == "_latest"))
       throw new IllegalStateException(
         s"snapshots: $tableDir holds a legacy rename-protocol table (a `_latest` " +
           "pointer over `v=N/` directories) and no `_log/` commit log — this protocol " +
           "neither reads nor extends that layout, and committing here would silently " +
           "drop its rows from every read. Re-commit its latest `v=N/` directory " +
           "(plain parquet) into a new table path with Snapshots.commit.")
+    top.collectFirst { case (n, false, _) if ArtifactIo.isDataFileName(n) => n }
+      .foreach { n =>
+        throw new IllegalStateException(
+          s"snapshots: $tableDir holds plain parquet data files ($n, …) and no `_log/` " +
+            "commit log — a commit here would create a version naming only the new " +
+            "batch, and every read would silently hide the existing rows. Commit the " +
+            "existing data into a new table path with Snapshots.commit, or use an " +
+            "empty directory.")
+      }
+  }
 
   /** Highest committed version, if any. Correctness never leans on
     * freshness: a stale listing only makes a committer's CAS lose and
@@ -192,8 +208,8 @@ object Snapshots {
   private def stage(df: DataFrame, tableDir: String): (String, Seq[String]) = {
     val fs = io(tableDir)
     val logDir = child(tableDir, LogDir)
-    // a table's first commit: refuse a legacy layout before writing into it
-    if (!fs.isDirectory(logDir)) { requireNoLegacyLayout(tableDir); fs.createDirs(logDir) }
+    // a table's first commit: refuse a foreign layout before writing into it
+    if (!fs.isDirectory(logDir)) { requireNoForeignLayout(tableDir); fs.createDirs(logDir) }
     val dirName = s"d-${java.util.UUID.randomUUID()}"
     df.write.parquet(child(tableDir, dirName))
     val own = fs.listNames(child(tableDir, dirName))

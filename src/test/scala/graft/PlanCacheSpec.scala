@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.PlanCache
+import graft.sources.{ArtifactIo, PlanCache}
 
 /** Cross-session container cache (reference `DSetGenerics.fs:1185-1234`,
   * `cache.fs:294-477`; paper §4.9): plan-fingerprint-keyed parquet
@@ -15,6 +15,13 @@ class PlanCacheSpec extends SparkSuite {
 
   private def tmpDir(tag: String): String =
     Files.createTempDirectory(s"graft-$tag").toString
+
+  /** An entry is published iff its `_graft_files` manifest exists. */
+  private def published(cacheDir: String, key: String): Boolean =
+    Files.exists(Paths.get(cacheDir, key, "_graft_files"))
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
 
   private def ordersAgg(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "orders")
@@ -80,28 +87,6 @@ class PlanCacheSpec extends SparkSuite {
     assert(!PlanCache.invalidate(df, cacheDir)) // already gone
     PlanCache.readThrough(df, cacheDir).count()
     assert(PlanCache.lastOutcome == PlanCache.Miss)
-  }
-
-  test("concurrent cold attaches race safely: one winner, identical reads") {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val cacheDir = tmpDir("pc")
-    val df = ordersAgg(spark, sf0001)
-    val expected = df.collect().map(_.toString).sorted.toSeq
-    val results = Await.result(
-      Future.sequence((1 to 4).map(_ => Future {
-        PlanCache.readThrough(df, cacheDir).collect().map(_.toString).sorted.toSeq
-      })), 2.minutes)
-    assert(results.forall(_ == expected))
-    // exactly one published entry, no stranded tmp dirs (stream closed —
-    // Files.list holds an open directory handle until closed)
-    val listing = java.nio.file.Files.list(java.nio.file.Paths.get(cacheDir))
-    val names = scala.collection.mutable.ListBuffer.empty[String]
-    try listing.iterator().forEachRemaining(p => names += p.getFileName.toString)
-    finally listing.close()
-    assert(names.count(!_.startsWith(".tmp-")) == 1, s"entries: $names")
-    assert(!names.exists(_.startsWith(".tmp-")), s"stranded tmp dirs: $names")
   }
 
   test("golden key: fingerprint of a fixed Column-only plan is stable") {
@@ -177,7 +162,7 @@ class PlanCacheSpec extends SparkSuite {
     assert(listKey != contentKey) // stats are part of the content key
     // the DEFAULT attach publishes under the CONTENT key (the r15 flip)
     val oldRows = PlanCache.readThrough(d1, cacheDir).collect().map(_.toString).sorted.toSeq
-    assert(Files.exists(Paths.get(cacheDir, contentKey, "_SUCCESS")))
+    assert(published(cacheDir, contentKey))
     assert(!Files.exists(Paths.get(cacheDir, listKey)))
     // content mode on an UNCHANGED input hits (stable stats), and an
     // explicit contentKeys = true lands on the default's entry
@@ -247,7 +232,7 @@ class PlanCacheSpec extends SparkSuite {
     }
     val k1 = PlanCache.fingerprint(q(), contentKeys = true)
     PlanCache.readThrough(q(), cacheDir, contentKeys = true).count()
-    assert(Files.exists(Paths.get(cacheDir, k1, "_SUCCESS")))
+    assert(published(cacheDir, k1))
     // overwrite IN PLACE: the content key rotates, so k1 is no longer
     // derivable from current stats — only the plan-id marker finds it
     val mtime0 = Files.getLastModifiedTime(file)
@@ -270,7 +255,7 @@ class PlanCacheSpec extends SparkSuite {
     spark.conf.set(PlanCache.ContentKeysConf, "true")
     try {
       PlanCache.readThrough(df, cacheDir, contentKeys = false).count()
-      assert(Files.exists(Paths.get(cacheDir, contentKey, "_SUCCESS")))
+      assert(published(cacheDir, contentKey))
       assert(!Files.exists(Paths.get(cacheDir, listKey)))
     } finally spark.conf.unset(PlanCache.ContentKeysConf)
     // conf = false is the same as unset: it cannot force the
@@ -282,7 +267,7 @@ class PlanCacheSpec extends SparkSuite {
       val (_, o) = PlanCache.readThroughWithOutcome(df, cacheDir)
       assert(o == PlanCache.Hit) // the content entry published above
       PlanCache.readThrough(df, cacheDir, contentKeys = false).count()
-      assert(Files.exists(Paths.get(cacheDir, listKey, "_SUCCESS")))
+      assert(published(cacheDir, listKey))
     } finally spark.conf.unset(PlanCache.ContentKeysConf)
   }
 
@@ -296,10 +281,10 @@ class PlanCacheSpec extends SparkSuite {
     val expKey = PlanCache.fingerprint(expired, contentKeys = true)
     val freshKey = PlanCache.fingerprint(fresh, contentKeys = true)
     // age the first entry past the retention: BOTH its last-use signals
-    // (the atime marker and the publish-time _SUCCESS) into the past
+    // (the atime marker and the publish-time manifest) into the past
     val old = java.nio.file.attribute.FileTime.fromMillis(
       System.currentTimeMillis() - 60 * 60 * 1000L)
-    Seq("_graft_atime", "_SUCCESS").foreach { f =>
+    Seq("_graft_atime", "_graft_files").foreach { f =>
       val p = Paths.get(cacheDir, expKey, f)
       if (Files.exists(p)) Files.setLastModifiedTime(p, old)
     }
@@ -310,12 +295,12 @@ class PlanCacheSpec extends SparkSuite {
       val (_, o1) = PlanCache.readThroughWithOutcome(fresh, cacheDir)
       assert(o1 == PlanCache.Hit)
       assert(!Files.exists(Paths.get(cacheDir, expKey)), "expired entry must be swept")
-      assert(Files.exists(Paths.get(cacheDir, freshKey, "_SUCCESS")))
+      assert(published(cacheDir, freshKey))
       // the expired plan re-attaches as a MISS and re-publishes
       val (re, o2) = PlanCache.readThroughWithOutcome(expired, cacheDir)
       assert(o2 == PlanCache.Miss)
       assert(re.count() > 0)
-      assert(Files.exists(Paths.get(cacheDir, expKey, "_SUCCESS")))
+      assert(published(cacheDir, expKey))
       // a hit refreshes the atime marker, resetting the entry's clock
       val before = Files.getLastModifiedTime(
         Paths.get(cacheDir, freshKey, "_graft_atime")).toMillis
@@ -327,12 +312,12 @@ class PlanCacheSpec extends SparkSuite {
     } finally spark.conf.unset(PlanCache.RetentionConf)
     // conf unset → no sweep: an aged entry survives (the original
     // live-until-invalidate contract is unchanged by default)
-    Seq("_graft_atime", "_SUCCESS").foreach { f =>
+    Seq("_graft_atime", "_graft_files").foreach { f =>
       val p = Paths.get(cacheDir, expKey, f)
       if (Files.exists(p)) Files.setLastModifiedTime(p, old)
     }
     PlanCache.readThrough(fresh, cacheDir).count()
-    assert(Files.exists(Paths.get(cacheDir, expKey, "_SUCCESS")))
+    assert(published(cacheDir, expKey))
   }
 
   test("invalidate on a never-written cacheDir returns false (no sweep crash)") {
@@ -378,18 +363,20 @@ class PlanCacheSpec extends SparkSuite {
     assert(f1 != PlanCache.fingerprint(q2))
   }
 
-  test("a corpse target (no _SUCCESS) is reclaimed, not a permanent wedge") {
+  test("a corpse target (no manifest) is reclaimed, not a permanent wedge") {
     val cacheDir = tmpDir("pc-corpse")
     val df = ordersAgg(spark, sf0001)
-    val rows = PlanCache.readThrough(df, cacheDir).collect().map(_.toString).sorted.toSeq
-    // simulate a crash mid-invalidate: the published dir survives but
-    // its _SUCCESS marker is gone
-    val target = Paths.get(cacheDir, PlanCache.fingerprint(df, contentKeys = true))
-    Files.delete(target.resolve("_SUCCESS"))
+    val rows = sortedRows(PlanCache.readThrough(df, cacheDir))
+    // simulate a crash mid-invalidate: eviction deletes the manifest
+    // first, so the dir and its parts survive unpublished
+    val key = PlanCache.fingerprint(df, contentKeys = true)
+    Files.delete(Paths.get(cacheDir, key, "_graft_files"))
     val (again, outcome) = PlanCache.readThroughWithOutcome(df, cacheDir)
-    assert(outcome == PlanCache.Miss) // recomputed and re-published
-    assert(again.collect().map(_.toString).sorted.toSeq == rows)
-    assert(Files.exists(target.resolve("_SUCCESS")), "key not re-published")
+    assert(outcome == PlanCache.Miss) // recomputed and re-published in place
+    // the old parts are still there, unnamed: serving them too would
+    // double every row
+    assert(sortedRows(again) == rows)
+    assert(published(cacheDir, key), "key not re-published")
   }
 
   test("stale tmp staging dirs from crashed writers are swept on attach") {
@@ -432,30 +419,8 @@ class PlanCacheSpec extends SparkSuite {
     assert(again.toSeq.toList.sorted == ds.toSeq.toList.sorted)
   }
 
-  test("file:-scheme'd cacheDir runs the whole cache lifecycle through the Hadoop-backed io") {
-    // the r17 store contract applied to the plan cache: publish (claim
-    // rename + plan-id marker), cross-session hit + atime touch,
-    // three-sweep invalidate — all primitives on the Hadoop io instead
-    // of java.nio, exercised via the file: scheme
-    val cacheDir = "file:" + tmpDir("pc-fs")
-    val df = ordersAgg(spark, sf0001)
-    val cold = PlanCache.readThrough(df, cacheDir).collect().sortBy(_.getString(0))
-    assert(PlanCache.lastOutcome == PlanCache.Miss)
-    val s2 = spark.newSession()
-    val warm = PlanCache.readThrough(ordersAgg(s2, sf0001), cacheDir)
-      .collect().sortBy(_.getString(0))
-    assert(PlanCache.lastOutcome == PlanCache.Hit)
-    assert(cold.map(_.toString).toSeq == warm.map(_.toString).toSeq)
-    // invalidate finds the published entry on the scheme'd store and the
-    // next attach recomputes
-    assert(PlanCache.invalidate(df, cacheDir, contentKeys = true))
-    PlanCache.readThrough(df, cacheDir): Unit
-    assert(PlanCache.lastOutcome == PlanCache.Miss)
-  }
-
   test("rename-by-copy schemes: strict forPath rejects with executable remediation, " +
       "forCachePath routes to the reduced object-store io") {
-    import graft.sources.ArtifactIo
     // the ARTIFACT-side rejection stands — and its remediation must name a
     // path that actually works (r17 verdict: the old message routed to
     // Snapshots, which threw the identical rejection)
@@ -467,7 +432,7 @@ class PlanCacheSpec extends SparkSuite {
     // reduced io: rename/lock primitives are unavailable THERE too — the
     // cache's protocol must never reach them
     val os = ArtifactIo.forCachePath("s3a://bucket/x")
-    assert(!os.renameAtomic)
+    assert(os.isInstanceOf[graft.sources.ObjectStoreArtifactIo])
     intercept[UnsupportedOperationException](os.rename("s3a://b/a", "s3a://b/c"))
     intercept[UnsupportedOperationException](os.withLock("s3a://b/l", 1L, "spec", "h") { 1 })
     // non-object-store paths resolve identically under both entry points
@@ -479,81 +444,134 @@ class PlanCacheSpec extends SparkSuite {
     hc.set("fs.mock3a.impl", classOf[graft.sources.RenameByCopyMockFs].getName)
     // additive — a plain set would deregister CasSnapshotsSpec's mock3c
     // from the shared SparkContext configuration mid-suite
-    graft.sources.ArtifactIo.addExtraScheme(hc,
-      graft.sources.ArtifactIo.RenameByCopyExtraSchemesKey, "mock3a")
+    ArtifactIo.addExtraScheme(hc, ArtifactIo.RenameByCopyExtraSchemesKey, "mock3a")
     "mock3a:" + tmpDir(tag)
   }
 
-  test("object-store cacheDir (simulated rename-by-copy store): manifest-last publish, " +
-      "manifest-resolved reads, invalidate; orphan parts are never read") {
-    val cacheDir = mock3aDir("pc-os")
-    val df = ordersAgg(spark, sf0001)
-    val cold = PlanCache.readThrough(df, cacheDir).collect().sortBy(_.getString(0))
-    assert(PlanCache.lastOutcome == PlanCache.Miss)
-    // the published entry is manifest-committed: _graft_files + _SUCCESS
-    val io = graft.sources.ArtifactIo.forCachePath(cacheDir)
-    val key = PlanCache.fingerprint(df)
-    val target = graft.sources.ArtifactIo.child(cacheDir, key)
-    assert(io.exists(graft.sources.ArtifactIo.child(target, "_graft_files")))
-    assert(io.exists(graft.sources.ArtifactIo.child(target, "_SUCCESS")))
-    // a losing double-publisher's orphan part must be INVISIBLE to reads:
-    // plant a part-named file of garbage next to the committed ones — a
-    // directory-listing read would pick it up and die; the manifest-
-    // resolved read must not
-    io.writeFile(graft.sources.ArtifactIo.child(target, "part-99999-orphan.parquet"),
-      "not parquet".getBytes("UTF-8"))
-    val s2 = spark.newSession()
-    val warm = PlanCache.readThrough(ordersAgg(s2, sf0001), cacheDir)
-      .collect().sortBy(_.getString(0))
-    assert(PlanCache.lastOutcome == PlanCache.Hit)
-    assert(cold.map(_.toString).toSeq == warm.map(_.toString).toSeq)
-    // three-sweep invalidate finds and evicts the manifest-committed entry
-    assert(PlanCache.invalidate(df, cacheDir, contentKeys = true))
-    PlanCache.readThrough(df, cacheDir): Unit
-    assert(PlanCache.lastOutcome == PlanCache.Miss)
+  /** The stores the one publish protocol runs on: scheme-less local
+    * (java.nio), `file:` (the Hadoop io) and `mock3a:` (a simulated
+    * rename-by-copy object store).
+    */
+  private val stores: Seq[(String, String => String)] = Seq(
+    "local" -> (tag => tmpDir(tag)),
+    "file:" -> (tag => "file:" + tmpDir(tag)),
+    "mock3a:" -> (tag => mock3aDir(tag)))
+
+  private def localPath(cacheDir: String): java.nio.file.Path =
+    Paths.get(cacheDir.stripPrefix("file:").stripPrefix("mock3a:"))
+
+  private def stagingDirs(cacheDir: String): Seq[java.nio.file.Path] =
+    Option(localPath(cacheDir).toFile.listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith(".tmp-")).map(_.toPath)
+
+  private def manifestNames(io: ArtifactIo, target: String): Seq[String] =
+    new String(io.readBytes(ArtifactIo.child(target, "_graft_files")).get, "UTF-8")
+      .split("\n").toSeq.filter(_.nonEmpty)
+
+  for ((store, mkDir) <- stores) {
+    test(s"[$store] miss → hit → invalidate → miss; the manifest is the commit point and " +
+        "orphan parts are never read") {
+      val cacheDir = mkDir("pc-life")
+      val io = ArtifactIo.forCachePath(cacheDir)
+      val df = ordersAgg(spark, sf0001)
+      val (cold, o1) = PlanCache.readThroughWithOutcome(df, cacheDir)
+      assert(o1 == PlanCache.Miss)
+      val coldRows = sortedRows(cold)
+      // published = the manifest; no entry-level _SUCCESS
+      val target = ArtifactIo.child(cacheDir, PlanCache.fingerprint(df))
+      assert(manifestNames(io, target).nonEmpty)
+      assert(!io.exists(ArtifactIo.child(target, "_SUCCESS")))
+      // a losing double-publisher's orphan part must be INVISIBLE to
+      // reads: plant a part-named file of garbage next to the committed
+      // ones — a directory-listing read would pick it up and die
+      io.writeFile(ArtifactIo.child(target, "part-99999-orphan.parquet"),
+        "not parquet".getBytes("UTF-8"))
+      // a new session re-declares the plan and hits
+      val (warm, o2) =
+        PlanCache.readThroughWithOutcome(ordersAgg(spark.newSession(), sf0001), cacheDir)
+      assert(o2 == PlanCache.Hit)
+      assert(sortedRows(warm) == coldRows)
+      // three-sweep invalidate evicts the entry; the next attach recomputes
+      assert(PlanCache.invalidate(df, cacheDir, contentKeys = true))
+      assert(!io.exists(target))
+      val (re, o3) = PlanCache.readThroughWithOutcome(df, cacheDir)
+      assert(o3 == PlanCache.Miss)
+      assert(sortedRows(re) == coldRows)
+    }
+
+    test(s"[$store] 4 concurrent miss racers converge on one coherent entry") {
+      // every racer misses and publishes (moves its parts in, then
+      // writes the manifest); the manifest names ONE writer's complete
+      // set, so every reader — during and after the race — sees one
+      // copy of the result, never a mix of two writers' parts (which a
+      // directory-listing read would return as doubled rows)
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration._
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val cacheDir = mkDir("pc-race")
+      val expected = sortedRows(ordersAgg(spark, sf0001))
+      val results = Await.result(Future.sequence((1 to 4).map { _ =>
+        Future {
+          val (df, outcome) =
+            PlanCache.readThroughWithOutcome(ordersAgg(spark.newSession(), sf0001), cacheDir)
+          (sortedRows(df), outcome)
+        }
+      }), 2.minutes)
+      results.foreach { case (rows, _) => assert(rows == expected, "torn or doubled read") }
+      assert(results.exists(_._2 == PlanCache.Miss), "somebody must have published")
+      val (warm, outcome) = PlanCache.readThroughWithOutcome(ordersAgg(spark, sf0001), cacheDir)
+      assert(outcome == PlanCache.Hit)
+      assert(sortedRows(warm) == expected)
+      // one entry, no stranded staging dirs, and the manifest names a
+      // COMPLETE set that exists on the store
+      val io = ArtifactIo.forCachePath(cacheDir)
+      val names = io.listNames(cacheDir)
+      assert(names.count(!_.startsWith(".")) == 1, s"entries: $names")
+      assert(!names.exists(_.startsWith(".tmp-")), s"stranded staging dirs: $names")
+      val target = ArtifactIo.child(cacheDir, PlanCache.fingerprint(ordersAgg(spark, sf0001)))
+      manifestNames(io, target).foreach(fn => assert(io.exists(ArtifactIo.child(target, fn))))
+    }
   }
 
-  test("object-store double publish: concurrent miss racers converge on one coherent entry") {
-    // the protocol's central claim, DRIVEN rather than argued: N racers
-    // all miss, all publish (copy parts in → manifest PUT → _SUCCESS),
-    // and because the manifest is a whole-object swap naming ONE
-    // writer's complete set, every reader — during and after the race —
-    // sees exactly one coherent copy of the result, never a mix of two
-    // writers' part files (which a directory-listing read would return
-    // as doubled rows)
-    val cacheDir = mock3aDir("pc-race")
-    val expected = ordersAgg(spark, sf0001).collect().map(_.toString).sorted.toSeq
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val racers = Future.sequence((1 to 4).map { _ =>
-      Future {
-        val s = spark.newSession()
-        val (df, outcome) = PlanCache.readThroughWithOutcome(ordersAgg(s, sf0001), cacheDir)
-        (df.collect().map(_.toString).sorted.toSeq, outcome)
+  for ((store, mkDir) <- stores.filter(s => s._1 == "local" || s._1 == "mock3a:")) {
+    test(s"[$store] a publish crashed after the staged write, after 1 of 3 moves or after the " +
+        "manifest leaves the next attach oracle-equal; the grace sweep reclaims its staging dir") {
+      final class Crash extends RuntimeException("crash")
+      val df = Tables.load(spark, sf0001, "orders")
+        .select(col("o_orderkey"), col("o_orderstatus")).repartition(3)
+      val oracle = sortedRows(df)
+      for ((step, next) <- Seq("staged" -> PlanCache.Miss, "moved-1" -> PlanCache.Miss,
+          "manifest" -> PlanCache.Hit)) {
+        val cacheDir = mkDir(s"pc-crash-$step")
+        val io = ArtifactIo.forCachePath(cacheDir)
+        val target = ArtifactIo.child(cacheDir, PlanCache.fingerprint(df))
+        intercept[Crash](PlanCache.readThroughHooked(df, cacheDir, contentKeys = true,
+          s => if (s == step) throw new Crash))
+        val crashed = stagingDirs(cacheDir)
+        assert(crashed.size == 1, s"$step: $crashed")
+        val (again, outcome) = PlanCache.readThroughWithOutcome(df, cacheDir)
+        assert(outcome == next, step)
+        assert(sortedRows(again) == oracle, s"$step: rows differ from the oracle")
+        val parts = io.listNames(target).filter(ArtifactIo.isDataFileName)
+        // after 1 of 3 moves the crashed writer's part stays, unnamed
+        assert(parts.size == manifestNames(io, target).size + (if (step == "moved-1") 1 else 0),
+          s"$step: $parts")
+        // age the crashed writer's whole staging tree past the grace: the
+        // next attach reclaims it
+        val old = java.nio.file.attribute.FileTime.fromMillis(
+          System.currentTimeMillis() - 8 * 60 * 60 * 1000L)
+        val walk = Files.walk(crashed.head)
+        try walk.iterator().forEachRemaining(p => Files.setLastModifiedTime(p, old))
+        finally walk.close()
+        PlanCache.readThrough(df, cacheDir): Unit
+        assert(stagingDirs(cacheDir).isEmpty, s"$step: staging dir not reclaimed")
       }
-    })
-    val results = Await.result(racers, 120.seconds)
-    results.foreach { case (rows, _) => assert(rows == expected, "torn or doubled read") }
-    assert(results.exists(_._2 == PlanCache.Miss), "somebody must have published")
-    // the settled entry: one more attach hits and reads the same rows
-    val (warm, outcome) = PlanCache.readThroughWithOutcome(ordersAgg(spark, sf0001), cacheDir)
-    assert(outcome == PlanCache.Hit)
-    assert(warm.collect().map(_.toString).sorted.toSeq == expected)
-    // the manifest names a COMPLETE set that exists on the store
-    val io = graft.sources.ArtifactIo.forCachePath(cacheDir)
-    val key = PlanCache.fingerprint(ordersAgg(spark, sf0001))
-    val target = graft.sources.ArtifactIo.child(cacheDir, key)
-    val named = new String(
-      io.readBytes(graft.sources.ArtifactIo.child(target, "_graft_files")).get, "UTF-8")
-      .split("\n").toSeq.filter(_.nonEmpty)
-    assert(named.nonEmpty)
-    named.foreach(fn => assert(io.exists(graft.sources.ArtifactIo.child(target, fn))))
+    }
   }
 
   test("mock3a really renames by copy+delete (the simulation is honest)") {
     val root = mock3aDir("pc-mockfs")
-    val io = graft.sources.ArtifactIo.forCachePath(root)
+    val io = ArtifactIo.forCachePath(root)
     // the reduced io refuses rename outright; drive the UNDERLYING fs to
     // pin the copy+delete semantics the scheme simulates
     val hc = spark.sparkContext.hadoopConfiguration

@@ -336,4 +336,27 @@ class SnapshotsSpec extends SparkSuite {
     assert(log == log0 ++ Set("2", "3", "4"))
     assert((dataDirs -- dirs3).size == 1, "only the peer's replace may leave a data dir")
   }
+
+  test("a plain parquet directory (top-level data files, no log) is refused by name; " +
+      "commit and commitAppend write nothing") {
+    val table = java.nio.file.Files.createTempDirectory("graft-snap-plain").toString + "/t"
+    Seq(1L, 2L).toDF("id").write.parquet(table)
+    val layout = new java.io.File(table).list().toSet
+    val df = Seq(3L).toDF("id")
+    val calls: Seq[(String, () => Any)] = Seq(
+      "commit" -> (() => Snapshots.commit(df, table)),
+      "commitAppend" -> (() => Snapshots.commitAppend(df, table)))
+    calls.foreach { case (name, call) =>
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains(table) && e.getMessage.contains("plain parquet"),
+        s"$name: ${e.getMessage}")
+      // no `_log`, no `d-*`: the old rows were not buried under a version
+      assert(new java.io.File(table).list().toSet == layout, name)
+    }
+    // a crashed first commit leaves only a `d-*` dir — not foreign data
+    val crashed = java.nio.file.Files.createTempDirectory("graft-snap-d").toString + "/t"
+    Seq(9L).toDF("id").write.parquet(s"$crashed/d-crashed")
+    assert(Snapshots.commitAppend(df, crashed) == 1)
+    assert(Snapshots.read(spark, crashed).as[Long].collect().toSeq == Seq(3L))
+  }
 }

@@ -47,6 +47,11 @@ class ArtifactIoSpec extends SparkSuite {
     // directory via java.io — both stores here are ultimately local disk)
     assert(!new java.io.File(root.stripPrefix("file:") + "/artifact")
       .listFiles().exists(_.getName.endsWith(".tmp")))
+    // moveFile: the file is under the new name only
+    io.writeFile(dir + "/part-0002", "rows".getBytes("UTF-8"))
+    io.moveFile(dir + "/part-0002", dir + "/part-0003")
+    assert(!io.exists(dir + "/part-0002"))
+    assert(io.readBytes(dir + "/part-0003").map(new String(_, "UTF-8")).contains("rows"))
     // marker delete is idempotent
     io.delete(dir + "/.marker")
     io.delete(dir + "/.marker")
@@ -107,7 +112,7 @@ class ArtifactIoSpec extends SparkSuite {
     ArtifactIo.addExtraScheme(hc, ArtifactIo.RenameByCopyExtraSchemesKey, "mock3a")
     val root = "mock3a:" + tmpDir("graft-aio-os")
     val io = ArtifactIo.forCachePath(root)
-    assert(!io.renameAtomic)
+    assert(io.isInstanceOf[graft.sources.ObjectStoreArtifactIo])
     val dir = root + "/entry"
     io.createDirs(dir)
     assert(io.exists(dir) && io.isDirectory(dir))
@@ -119,18 +124,18 @@ class ArtifactIoSpec extends SparkSuite {
     io.writeAtomic(dir + "/_graft_files", "part-0001".getBytes("UTF-8"))
     assert(io.readBytes(dir + "/_graft_files")
       .map(new String(_, "UTF-8")).contains("part-0001"))
-    io.linkOrCopy(dir + "/part-0001", dir + "/part-0002")
+    // moveFile is the connector's copy+delete here: not atomic, which
+    // the plan cache never needs (it moves parts no manifest names yet)
+    io.moveFile(dir + "/part-0001", dir + "/part-0002")
     assert(io.readBytes(dir + "/part-0002").map(new String(_, "UTF-8")).contains("rows"))
-    assert(io.listNames(dir).toSet ==
-      Set("_SUCCESS", "part-0001", "part-0002", "_graft_files"))
-    assert(io.listEntries(dir).collect { case (n, false, sz) if n == "part-0001" => sz }
+    assert(io.listNames(dir).toSet == Set("_SUCCESS", "part-0002", "_graft_files"))
+    assert(io.listEntries(dir).collect { case (n, false, sz) if n == "part-0002" => sz }
       == Seq(4L))
-    assert(io.mtimeMs(dir + "/part-0001").isDefined)
+    assert(io.mtimeMs(dir + "/part-0002").isDefined)
     // the primitives whose correctness needs atomic rename / O_EXCL are
     // UNAVAILABLE, loudly — protocols on this store class must be
     // written without them
     intercept[UnsupportedOperationException](io.rename(dir, root + "/x"))
-    intercept[UnsupportedOperationException](io.tryRenameNoReplace(dir + "/a", dir + "/b"))
     intercept[UnsupportedOperationException](
       io.withLock(dir + "/.lock", 1L, "spec", "hint") { 1 })
     intercept[UnsupportedOperationException](io.tryWithLock(dir + "/.lock") { 1 })
@@ -167,19 +172,19 @@ class ArtifactIoSpec extends SparkSuite {
     hio.withLock("file:" + root + "/h.lock", 1000L, "spec", "hint") { () }
   }
 
-  test("file:-scheme'd tryRenameNoReplace is the java.nio atomic form") {
+  test("file:-scheme'd tryPutIfAbsent is the java.nio link form: a taken name loses, " +
+      "a free one wins") {
     val root = tmpDir("graft-aio-claim")
     val io = ArtifactIo.forPath("file:" + root)
-    io.createDirs("file:" + root + "/stage")
-    io.touch("file:" + root + "/stage/part-0001")
-    io.createDirs("file:" + root + "/v=1")
-    io.touch("file:" + root + "/v=1/part-0000")
-    // claimed collision (non-empty destination dir) loses, stage intact
-    assert(!io.tryRenameNoReplace("file:" + root + "/stage", "file:" + root + "/v=1"))
-    assert(io.exists("file:" + root + "/stage/part-0001"))
-    // free name wins
-    assert(io.tryRenameNoReplace("file:" + root + "/stage", "file:" + root + "/v=2"))
-    assert(io.exists("file:" + root + "/v=2/part-0001"))
+    assert(io.tryPutIfAbsent("file:" + root + "/_log/1", "first".getBytes("UTF-8")))
+    // a taken name loses and leaves the winner's bytes (a rename would
+    // silently replace a FILE destination)
+    assert(!io.tryPutIfAbsent("file:" + root + "/_log/1", "second".getBytes("UTF-8")))
+    assert(io.readBytes("file:" + root + "/_log/1").map(new String(_, "UTF-8"))
+      .contains("first"))
+    assert(io.tryPutIfAbsent("file:" + root + "/_log/2", "second".getBytes("UTF-8")))
+    // no staging debris next to the records
+    assert(io.listNames("file:" + root + "/_log").toSet == Set("1", "2"))
   }
 
   test("a body failure releases the hadoop lock and stays the primary exception") {

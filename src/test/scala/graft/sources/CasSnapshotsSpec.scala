@@ -44,9 +44,9 @@ class CasSnapshotsSpec extends SparkSuite {
     assert(ex.getMessage.contains(ArtifactIo.ConditionalPutExtraSchemesKey), ex.getMessage)
     assert(ex.getMessage.contains("graft.sources.Snapshots"), ex.getMessage)
     // the declared store is admitted — rename-by-copy semantics intact
-    // (renameAtomic=false, rename/lock throw), CAS available
+    // (the object-store io: rename/lock throw), CAS available
     val io = ArtifactIo.forSnapshotPath(mock3cDir("cas-adm2") + "/t")
-    assert(!io.renameAtomic)
+    assert(io.isInstanceOf[graft.sources.CasObjectStoreArtifactIo])
     intercept[UnsupportedOperationException](io.rename("mock3c:/a", "mock3c:/b"))
     intercept[UnsupportedOperationException](io.withLock("mock3c:/l", 1L, "spec", "h") { 1 })
     // the UNDECLARED object-store io (plan-cache resolution) refuses the
